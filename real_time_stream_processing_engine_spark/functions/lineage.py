@@ -34,7 +34,15 @@ def lineage_cut(df: DataFrame, eager: bool = False) -> DataFrame:
     """Truncate ``df``'s lineage: reliable ``checkpoint`` when
     ``$SPARK_GRAFT_CHECKPOINT_DIR`` is set, executor-local
     ``localCheckpoint`` otherwise (both lazy by default — the next
-    action over the frame materializes it, so no extra job)."""
+    action over the frame materializes it, so no extra job).
+
+    Two things the reliable form leaves to the caller: its checkpoint
+    files under ``$SPARK_GRAFT_CHECKPOINT_DIR`` are never cleaned up
+    (Spark removes them only when
+    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on, which
+    the engine does not set), and each call re-sets the checkpoint dir of
+    the SHARED SparkContext, so any later ``checkpoint`` in the same
+    session writes there too."""
     ckpt_dir = os.environ.get(_ENV)
     if ckpt_dir:
         # the reliable data dir is captured when checkpoint() runs, so

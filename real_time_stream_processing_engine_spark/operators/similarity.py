@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.partitioning import fan_out, fan_out_buckets
+from ..functions.partitioning import fan_out_buckets
 from ..functions.vectors import dot, l2_norm, lit_double_array
 from .dedup import MAX_BUCKET, _cap_buckets
 

@@ -12145,7 +12145,10 @@ def q230_sequence_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("m_loop"),
     )
-    hits = agg.select(
+    # A global aggregate emits one row even over no sessions; the
+    # crossJoin form (and the DuckDB oracle) emit none, so drop it
+    # before the explode turns it into three zero-session rows.
+    hits = agg.where(F.col("n_sessions") > 0).select(
         F.explode(
             F.array(
                 F.struct(

@@ -3,19 +3,24 @@
 - lineage_cut posture knob: local by default, reliable checkpoint
   under $SPARK_GRAFT_CHECKPOINT_DIR (r12 verdict item 7).
 - q230 literal-pattern rewrite equivalence (the crossJoin + per-row
-  RLIKE-compile form vs the single-aggregate literal form).
+  RLIKE-compile form vs the single-aggregate literal form), and its
+  empty-input parity with the DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from real_time_stream_processing_engine_spark.functions.lineage import (
     lineage_cut,
 )
+from real_time_stream_processing_engine_spark.queries import ORACLE, QUERIES
+
+from .oracle import compare, duck_connection
 
 
 def test_lineage_cut_local_by_default(spark, monkeypatch, tmp_path):
@@ -31,8 +36,17 @@ def test_lineage_cut_local_by_default(spark, monkeypatch, tmp_path):
 def test_lineage_cut_reliable_under_env(spark, monkeypatch, tmp_path):
     ckpt = tmp_path / "ckpt"
     monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
-    df = lineage_cut(spark.range(10))
-    assert df.count() == 10
+    # lineage_cut re-sets the SHARED context's checkpoint dir; put the
+    # previous one back so later tests never write under this tmp path
+    jvm_sc = spark.sparkContext._jsc.sc()
+    prev = jvm_sc.getCheckpointDir()
+    try:
+        df = lineage_cut(spark.range(10))
+        assert df.count() == 10
+    finally:
+        # Scala setter of SparkContext.checkpointDir (an Option, so an
+        # unset dir is restored as unset, which setCheckpointDir cannot do)
+        getattr(jvm_sc, "checkpointDir_$eq")(prev)
     # reliable checkpoint: RDD blocks written under the configured dir
     found = [
         os.path.join(r, f)
@@ -98,6 +112,22 @@ def test_q230_literal_rewrite_matches_crossjoin_form(spark):
     assert sorted(map(tuple, old.collect())) == sorted(
         map(tuple, new.collect())
     )
+
+
+def test_q230_empty_input_matches_oracle(spark, sf_dir, tmp_path):
+    """No sessions in, no rows out: the one-row global aggregate must
+    not explode into three zero-session rows (the DuckDB oracle's
+    GROUP BY over no sessions is empty)."""
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    pq.write_table(events.slice(0, 0), str(tmp_path / "events.parquet"))
+    df = QUERIES["q230_sequence_patterns"](spark, str(tmp_path))
+    con = duck_connection(str(tmp_path))
+    try:
+        result = compare(df, con, ORACLE["q230_sequence_patterns"])
+    finally:
+        con.close()
+    assert result["rows_spark"] == 0
+    assert result["ok"], result
 
 
 def test_extra_conf_java_options_merge_with_defaults():
