@@ -959,7 +959,7 @@ def q37_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = enriched.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value")
     )
-    return run_to_memory_available_now(agg)
+    return run_to_memory_available_now(agg).frame
 
 
 # --------------------------------------------------------------------------

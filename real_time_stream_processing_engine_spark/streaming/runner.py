@@ -18,6 +18,8 @@ import shutil
 import tempfile
 import uuid
 import warnings
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -207,46 +209,35 @@ def _env_max_files_per_trigger() -> int | None:
     return n if n > 0 else None
 
 
-def _staged_events_stream(spark: SparkSession, d: str, src_path: str,
-                          default_max_files: int | None = 1) -> DataFrame:
-    """Shared reader setup for every staged-events file stream (the
-    dedup/CDC/count-min/binned/bitmap paths): unit-sniffed schema + ts
-    conversion (never diverging from batch reads) and
-    maxFilesPerTrigger — the SPARK_GRAFT_STREAM_MAX_FILES harness
-    override first, the caller's default otherwise.  Factored so a
-    reader-setup change cannot silently reach only some of the five
-    call sites (reviewed r5)."""
+def _read_events_stream(
+    spark: SparkSession, src_path: str, stream_dir: str, max_files: int | None
+) -> DataFrame:
+    """The one reader setup for every events file stream: the schema
+    and timestamp conversion are unit-sniffed from ``src_path`` and
+    SHARED with load_table, so batch and stream reads can never diverge
+    on the timestamp unit.  ``stream_dir`` is what the file source
+    polls (the table itself or a staged symlink dir)."""
     schema, conv = read_schema_for("events", src_path)
-    mft = _env_max_files_per_trigger()
-    if mft is None:
-        mft = default_max_files
     # maxFileAge defaults to 7d: on a long-running stream a backfill
     # file whose mtime is >7d older than the newest seen file is
     # SILENTLY never picked up, breaking stream==batch (r7 review).
     # The seen-files map this grows is bounded by file count, not data.
     reader = spark.readStream.schema(schema).option("maxFileAge", "36500d")
-    if mft is not None:
-        reader = reader.option("maxFilesPerTrigger", mft)
-    return convert_ts_cols(reader.parquet(d), conv)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    return convert_ts_cols(reader.parquet(stream_dir), conv)
 
 
 def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream over the events table (the reference's chunk
     stream, E1).  ``maxFilesPerTrigger`` is the backpressure knob the
-    reference lacks (busy-wait blast, ``RainStorm.java:1292-1296``)."""
+    reference lacks (busy-wait blast, ``RainStorm.java:1292-1296``);
+    an explicit value wins over the SPARK_GRAFT_STREAM_MAX_FILES
+    harness override."""
     path = os.path.join(sf_dir, "events.parquet")
-    # unit-sniffed schema + conversion SHARED with load_table, so batch
-    # and stream reads can never diverge on the timestamp unit
-    schema, conv = read_schema_for("events", path)
-    # maxFileAge: see _staged_events_stream — the 7d default silently
-    # skips old-mtime backfills on long-running streams
-    reader = spark.readStream.schema(schema).option("maxFileAge", "36500d")
     if max_files_per_trigger is None:
         max_files_per_trigger = _env_max_files_per_trigger()
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(_as_stream_dir(path))
-    return convert_ts_cols(df, conv)
+    return _read_events_stream(spark, path, _as_stream_dir(path), max_files_per_trigger)
 
 
 def stream_rate(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
@@ -357,64 +348,73 @@ def run_continuous(
     )
 
 
+@dataclass(frozen=True)
+class DrainReport:
+    """What one :func:`run_to_memory_available_now` drain produced: the
+    drained table and the engine's own accounting, each summed over
+    the drain's micro-batches.
+
+    - ``observed``: ``{observation: {metric: total}}`` from any
+      ``df.observe(name, ...)`` upstream — the tuple accounting the
+      reference leader scraped from per-task logs
+      (``Node.java:1162-1187``), computed IN the dataflow here.
+    - ``state``: state-operator metrics, e.g.
+      ``numRowsDroppedByWatermark`` (late rows the watermark
+      discarded) and ``commitTimeMs`` (state-store commits).
+    - ``phases_ms``: the ``durationMs`` phases (``triggerExecution``,
+      ``queryPlanning``, ``addBatch``, ``walCommit``,
+      ``commitOffsets``, ...) — per-batch coordination split from
+      compute."""
+
+    frame: DataFrame
+    observed: dict[str, dict[str, float]]
+    state: dict[str, float]
+    phases_ms: dict[str, float]
+
+
+# Per-micro-batch cost scales with the number of state-store partitions
+# (each one loads, commits, and fsyncs per batch) — for a drain over
+# local testdata, 32 stores of a few keys each is pure overhead (~4
+# s/query -> ~1.5 s at 8; the r12 isolated sweep re-measured 8 vs 2
+# across q42/q136/q30 at 6.1/3.7/3.2 s -> 3.9/2.9/2.0 s).  The state
+# partition count is fixed by the checkpoint's first batch, so this
+# only applies to fresh checkpoints.
+_DRAIN_SHUFFLE_PARTITIONS = "2"
+
+
+def _add_numbers(total: dict, metrics: dict) -> None:
+    for k, v in metrics.items():
+        if isinstance(v, (int, float)):
+            total[k] = total.get(k, 0) + v
+
+
 def run_to_memory_available_now(
     agg: DataFrame, output_mode: str = "complete", name_prefix: str = "rs_mem"
-) -> DataFrame:
+) -> DrainReport:
     """Drain a streaming aggregation with Trigger.AvailableNow into a
-    memory sink and return the final table.  Used by correctness checks:
-    stream-end state must equal the batch answer.
+    memory sink and return a :class:`DrainReport` whose ``frame`` is
+    the final table.  Used by correctness checks: stream-end state must
+    equal the batch answer.
 
-    Observability: any ``df.observe(name, ...)`` metrics attached
-    upstream are summed across micro-batches and left on
-    ``run_to_memory_available_now.last_observed`` (``{observation:
-    {metric: total}}``) — the engine-side account of tuples processed,
-    the role of the reference leader's per-task tuple log
-    (``Node.java:1162-1187``), but computed IN the dataflow instead of
-    by a log-scraping leader.
-
-    CONTRACT: drains are single-threaded per session — the metric side
-    channels (function attributes) and the conf set/restore around the
-    drain are not safe against two concurrent drains on one
-    SparkSession.  The drain's tmpfs checkpoint is reclaimed on return
-    (the unbounded leak in a long bench loop); the memory-sink view
-    persists for the session, bounded by result sizes."""
+    CONTRACT: drains are single-threaded per session — the conf
+    set/restore around the drain is not safe against two concurrent
+    drains on one SparkSession.  Nothing outlives the call but the
+    report: the tmpfs checkpoint is reclaimed and the memory-sink view
+    dropped (the frame keeps the sink's rows), on the exception path
+    too."""
     spark = agg.sparkSession
     qname = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(_scratch_dir(), f"rs_ckpt_{qname}")
-    # Per-micro-batch cost scales with the number of state-store
-    # partitions (each one loads, commits, and fsyncs per batch) — for
-    # a single-drain harness over local testdata, 32 stores of a few
-    # keys each is pure overhead (~4 s/query -> ~1.5 s at 8; the r12
-    # isolated sweep re-measured 8 vs 2 across q42/q136/q30 at
-    # 6.1/3.7/3.2 s -> 3.9/2.9/2.0 s, so the local default is now 2).
-    # The state partition count is fixed by the checkpoint's first
-    # batch, so this only applies to fresh checkpoints; a production
-    # job sizes it to the keyspace via the same knob.
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    stream_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "2")
-    # State-store backend: default HDFS-backed (in-heap, fastest for the
-    # small-keyspace local drains); SPARK_GRAFT_STATE_STORE=rocksdb
-    # switches to RocksDB — the 100 TB posture where state outgrows the
-    # heap (spill-to-disk, changelog checkpointing).  Per-query: the
-    # provider is read at query start, restored after.
-    prev_store = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    want_rocks = os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb"
     # recentProgress is a RING BUFFER (default 100 entries); a drain
     # with more micro-batches than that would silently undercount the
-    # summed observe/state metrics below — size it for the drain
+    # summed metrics below — size it for the drain
     prev_progress = spark.conf.get(
         "spark.sql.streaming.numRecentProgressUpdates", None
     )
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
+        spark.conf.set("spark.sql.shuffle.partitions", _DRAIN_SHUFFLE_PARTITIONS)
         spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-        if want_rocks:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            )
         q = (
             agg.writeStream.format("memory")
             .queryName(qname)
@@ -425,32 +425,15 @@ def run_to_memory_available_now(
         )
         q.awaitTermination()
         observed: dict[str, dict[str, float]] = {}
+        state: dict[str, float] = {}
+        phases: dict[str, float] = {}
         for p in q.recentProgress:
-            om = p.get("observedMetrics") if isinstance(p, dict) else None
-            if om is None and hasattr(p, "observedMetrics"):
-                om = p.observedMetrics
-            for obs_name, row in (om or {}).items():
-                tot = observed.setdefault(obs_name, {})
-                vals = row.asDict() if hasattr(row, "asDict") else dict(row)
-                for k, v in vals.items():
-                    if isinstance(v, (int, float)):
-                        tot[k] = tot.get(k, 0) + v
-        run_to_memory_available_now.last_observed = observed
-        # state-operator accounting summed across micro-batches — e.g.
-        # numRowsDroppedByWatermark is the engine's own count of late
-        # rows discarded by the watermark (pinned by
-        # tests/test_watermark_lateness.py)
-        state_metrics: dict[str, int] = {}
-        for p in q.recentProgress:
-            ops = p.get("stateOperators") if isinstance(p, dict) else None
-            if ops is None and hasattr(p, "stateOperators"):
-                ops = p.stateOperators
-            for op in ops or []:
-                for k, v in (op if isinstance(op, dict) else {}).items():
-                    if isinstance(v, (int, float)):
-                        state_metrics[k] = state_metrics.get(k, 0) + v
-        run_to_memory_available_now.last_state_metrics = state_metrics
-        out = spark.table(qname)
+            _add_numbers(phases, p["durationMs"])
+            for op in p["stateOperators"]:
+                _add_numbers(state, op)
+            for obs_name, row in p["observedMetrics"].items():
+                _add_numbers(observed.setdefault(obs_name, {}), row.asDict())
+        frame = spark.table(qname)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if prev_progress:
@@ -459,22 +442,12 @@ def run_to_memory_available_now(
             )
         else:
             spark.conf.unset("spark.sql.streaming.numRecentProgressUpdates")
-        if want_rocks:
-            if prev_store:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev_store
-                )
-            else:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        # reclaim the checkpoint (state/offset/commit logs on tmpfs —
-        # the unbounded part of a long bench loop; the memory sink's
-        # data lives in the driver, so the table stays readable).  In
-        # the finally so the EXCEPTION path doesn't leak either (r7
-        # review): this checkpoint is fresh-uuid per call, so nothing
-        # can ever resume from it.  The temp view itself persists for
-        # the session, bounded by result sizes.
+        # this checkpoint is fresh-uuid per call, so nothing can ever
+        # resume from it; the sink's rows live in the driver-side
+        # MemorySink that the resolved frame holds, not in the view
         shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        spark.catalog.dropTempView(qname)
+    return DrainReport(frame, observed, state, phases)
 
 
 def stream_grouped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,7 +455,7 @@ def stream_grouped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-end == batch groupBy count."""
     src = stream_events(spark, sf_dir)
     agg = src.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    return run_to_memory_available_now(agg)
+    return run_to_memory_available_now(agg).frame
 
 
 def _windowed_event_counts(
@@ -505,7 +478,7 @@ def _windowed_event_counts(
             "sum_value",
         )
     )
-    return run_to_memory_available_now(agg)
+    return run_to_memory_available_now(agg).frame
 
 
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,11 +527,12 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dupdir",
         {**_expand_links("events_a", src_path), **_expand_links("events_b", src_path)},
     )
-    src = _staged_events_stream(spark, d, src_path, default_max_files=None
-                                ).withWatermark("ts", "2 hours")
+    src = _read_events_stream(
+        spark, src_path, d, _env_max_files_per_trigger()
+    ).withWatermark("ts", "2 hours")
     deduped = src.dropDuplicatesWithinWatermark(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    return run_to_memory_available_now(agg)
+    return run_to_memory_available_now(agg).frame
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,7 +559,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return run_to_memory_available_now(agg)
+    return run_to_memory_available_now(agg).frame
 
 
 def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,10 +587,116 @@ def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    spark_df = run_to_memory_available_now(out, output_mode="update")
+    spark_df = run_to_memory_available_now(out, output_mode="update").frame
     # update-mode sink appends one row per key per batch; the final
     # running total per key is the max (counts are monotone).
     return spark_df.groupBy("event_type").agg(F.max("cnt").alias("cnt"))
+
+
+def _maintain_table(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    merge: Callable[[DataFrame, DataFrame | None], DataFrame],
+    target_path: str | None,
+    checkpoint: str | None,
+    fail_after_batches: int | None = None,
+    *,
+    ledger: bool,
+    copies: tuple[str, ...] = ("events",),
+    seed: Callable[[], DataFrame] | None = None,
+) -> DataFrame:
+    """The one update loop behind every maintained table: a parquet target
+    that a ``foreachBatch`` stream over the events table updates behind
+    ``catalog.replace_contents``' atomic swap, drained with
+    ``Trigger.AvailableNow``; returns the target as read back.
+
+    Each micro-batch calls ``merge(batch, prev)`` with ``prev`` the
+    current target (``None`` before the first write) and swaps the
+    result in.  ``ledger`` adds the batch-id ledger for merges that are
+    NOT idempotent: ``last_batch`` and ``last_ckpt`` ride in the target
+    rows, swapped atomically with them, so a replayed batch id <= the
+    ledger is skipped whole and a foreign checkpoint is refused
+    (:func:`_check_ledger_ckpt`).  ``copies`` stages the events table
+    once per name (two = every tuple redelivered); ``seed`` builds the
+    initial target when none exists.
+
+    ``target_path``/``checkpoint`` default to fresh scratch dirs
+    (``rs_<tag>_target_*``, ``rs_ckpt_rs_<tag>_*``); pass both
+    explicitly to RESUME an interrupted run from its checkpoint.  A
+    default checkpoint is unresumable by construction, so it is
+    reclaimed when the drain ends, cleanly or not.  ``fail_after_batches``
+    is the crash-injection hook: the sink raises after N applied
+    batches, exactly like an executor/driver loss mid-stream, and the
+    drain raises it to the caller."""
+    from ..sources.catalog import recover_swap, replace_contents
+
+    src_path = os.path.join(sf_dir, "events.parquet")
+    d = _stage_symlink_dir(
+        f"{tag}dir",
+        {k: v for c in copies for k, v in _expand_links(c, src_path).items()},
+    )
+    if target_path is None:
+        target_path = os.path.join(
+            _scratch_dir(), f"rs_{tag}_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
+        )
+    default_ckpt = checkpoint is None
+    ckpt = checkpoint or os.path.join(
+        _scratch_dir(), f"rs_ckpt_rs_{tag}_{uuid.uuid4().hex[:8]}"
+    )
+    # recover_swap first: a crash inside replace_contents' rename window
+    # leaves the target briefly missing but fully recoverable from its
+    # swap siblings — seeding in that state would silently drop every
+    # batch the checkpoint already marked committed.  The seed goes
+    # through the SAME atomic swap as every batch write: a plain
+    # write.parquet could crash mid-commit and leave a partial dir that
+    # recover_swap's existence check would treat as a complete table.
+    if not recover_swap(spark, target_path) and seed is not None:
+        replace_contents(seed(), target_path)
+
+    n_applied = 0
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        nonlocal n_applied
+        if fail_after_batches is not None and n_applied >= fail_after_batches:
+            raise RuntimeError("injected sink crash (fail_after_batches)")
+        s = batch.sparkSession
+        # Only the missing-target case (first batch) may merge from
+        # nothing; any other read failure propagates so the checkpoint
+        # retries the batch instead of silently resetting the table to
+        # one batch's worth.
+        prev = None
+        if hadoop_path_exists(s, target_path):
+            prev = s.read.parquet(target_path)
+            if ledger:
+                head = prev.select(
+                    F.max("last_batch").alias("b"), F.max("last_ckpt").alias("c")
+                ).head()
+                _check_ledger_ckpt(head.c, ckpt, target_path)
+                if head.b is not None and batch_id <= head.b:
+                    return  # replayed batch: the ledger makes it a no-op
+                prev = prev.drop("last_batch", "last_ckpt")
+        merged = merge(batch, prev)
+        if ledger:
+            merged = merged.withColumn("last_batch", F.lit(batch_id)).withColumn(
+                "last_ckpt", F.lit(_norm_ckpt(ckpt))
+            )
+        replace_contents(merged, target_path)
+        n_applied += 1
+
+    src = _read_events_stream(spark, src_path, d, _env_max_files_per_trigger() or 1)
+    try:
+        (
+            src.writeStream.foreachBatch(apply_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        if default_ckpt:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
 
 
 def stream_cdc_upsert(
@@ -634,8 +714,8 @@ def stream_cdc_upsert(
     micro-batches, the reference's retry-storm delivery
     (``Node.java:1547-1564``).  Each batch: latest-wins rank within
     the batch, then :func:`..operators.cdc.apply_upsert_versioned`
-    into a parquet target (read-modify-write behind an atomic swap,
-    ``catalog.replace_contents``).  The STRICTLY-newer version gate
+    into a parquet target seeded from the customer dim (see
+    :func:`_maintain_table`).  The STRICTLY-newer version gate
     makes the redelivered batch a no-op, so the final target equals
     the batch answer (q67's mapping + version ledger) no matter the
     batch count or order — sink-side dedup with a durable ledger,
@@ -645,52 +725,23 @@ def stream_cdc_upsert(
     both explicitly to RESUME an interrupted run — the checkpoint
     replays unfinished batches, and the version gate makes any batch
     that already half-applied idempotent.  ``fail_after_batches`` is
-    the crash-injection hook for that test: the foreachBatch sink
-    raises after N batches, exactly like an executor/driver loss
-    mid-stream."""
-    from ..operators.cdc import apply_upsert_versioned
-    from ..sources.catalog import recover_swap, replace_contents
-    from ..sources.readers import load_table
-
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir(
-        "cdcdir",
-        {**_expand_links("events_a", src_path), **_expand_links("events_b", src_path)},
-    )
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_cdc_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    # recover_swap first: a crash inside replace_contents' rename window
-    # leaves the target briefly missing but fully recoverable from its
-    # swap siblings — reseeding in that state would silently drop every
-    # batch the checkpoint already marked committed.
-    if not recover_swap(spark, target_path):  # truly fresh: seed the dim
-        # seed through the SAME atomic swap as every batch write — a
-        # plain write.parquet could crash mid-commit and leave a
-        # partial dir that recover_swap's existence check would then
-        # treat as a complete table on restart (reviewed r5)
-        replace_contents(
-            load_table(spark, sf_dir, "customer").select(
-                "c_custkey",
-                "c_name",
-                "c_acctbal",
-                F.lit(None).cast("timestamp").alias("ver_ts"),
-                F.lit(None).cast("long").alias("ver_event_id"),
-            ),
-            target_path,
-        )
-
+    the crash-injection hook for that test: the drain raises after N
+    applied batches."""
     from pyspark.sql import Window
 
-    n_applied = {"n": 0}
+    from ..operators.cdc import apply_upsert_versioned
+    from ..sources.readers import load_table
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if (
-            fail_after_batches is not None
-            and n_applied["n"] >= fail_after_batches
-        ):
-            raise RuntimeError("injected sink crash (fail_after_batches)")
+    def seed() -> DataFrame:
+        return load_table(spark, sf_dir, "customer").select(
+            "c_custkey",
+            "c_name",
+            "c_acctbal",
+            F.lit(None).cast("timestamp").alias("ver_ts"),
+            F.lit(None).cast("long").alias("ver_event_id"),
+        )
+
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(
             F.desc("ts"), F.desc("event_id")
         )
@@ -708,43 +759,19 @@ def stream_cdc_upsert(
                 "event_id",
             )
         )
-        merged = apply_upsert_versioned(
-            batch.sparkSession.read.parquet(target_path),
+        return apply_upsert_versioned(
+            prev,
             updates,
             key_cols=["c_custkey"],
             set_cols={"c_acctbal": "new_bal"},
             version_cols={"ver_ts": "ts", "ver_event_id": "event_id"},
             insert_only_cols={"c_name": "new_name"},
         )
-        replace_contents(merged, target_path)
-        n_applied["n"] += 1
 
-    src = _staged_events_stream(spark, d, src_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_cdc_{uuid.uuid4().hex[:8]}"
+    final = _maintain_table(
+        spark, sf_dir, "cdc", merge, target_path, checkpoint, fail_after_batches,
+        ledger=False, copies=("events_a", "events_b"), seed=seed,
     )
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    except Exception as e:
-        # suppress ONLY the injected crash (the caller restarts from
-        # the same checkpoint + target to prove recovery); a genuine
-        # failure in the merge path must not masquerade as one
-        if fail_after_batches is None or "injected sink crash" not in str(e):
-            raise
-    if default_ckpt and fail_after_batches is None:
-        # fresh-uuid checkpoint after a clean drain: unresumable by
-        # construction — reclaim the tmpfs logs (r7 review: q69 bench
-        # loops leaked one per run).  The target stays: it IS the
-        # maintained table the returned frame reads.
-        shutil.rmtree(ckpt, ignore_errors=True)
-    final = spark.read.parquet(target_path)
     return final.select(
         "c_custkey",
         "c_name",
@@ -814,7 +841,7 @@ def stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    drained = run_to_memory_available_now(out, output_mode="update")
+    drained = run_to_memory_available_now(out, output_mode="update").frame
     # update mode appends one row per user per batch; stage is monotone
     # in the event set, so the final stage is the max
     return drained.groupBy("user_id").agg(F.max("stage").alias("stage"))
@@ -845,7 +872,7 @@ def stream_window_leaderboard(
             "n_events",
         )
     )
-    state = run_to_memory_available_now(agg)
+    state = run_to_memory_available_now(agg).frame
     rk = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc("user_id")
     )
@@ -929,7 +956,7 @@ def _click_purchase_interval_join(
         F.unix_timestamp("b_ts").alias("purchase_ts"),
         F.round("purchase_value", 2).alias("purchase_value"),
     )
-    return run_to_memory_available_now(joined, output_mode="append")
+    return run_to_memory_available_now(joined, output_mode="append").frame
 
 
 def _norm_ckpt(path: str) -> str:
@@ -999,147 +1026,15 @@ def stream_countmin(
     associativity + the ledger give stream-end == batch-sketch EXACT
     equality (pinned in ``tests/test_streaming_live.py``)."""
     from ..operators.sketches import countmin_build, countmin_merge
-    from ..sources.catalog import recover_swap, replace_contents
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir("cmsdir", _expand_links("events", src_path))
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_cms_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    recover_swap(spark, target_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_cms_{uuid.uuid4().hex[:8]}"
-    )
-
-    n_applied = {"n": 0}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if (
-            fail_after_batches is not None
-            and n_applied["n"] >= fail_after_batches
-        ):
-            raise RuntimeError("injected sink crash (fail_after_batches)")
-        s = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         items = batch.select(F.col(item_col).cast("string").alias("tok"))
         delta = countmin_build(items)
-        # Only the first-batch missing-target case may seed from the
-        # delta (same contract as stream_binned_counts): any other
-        # read failure propagates so the checkpoint retries instead of
-        # silently resetting the sketch to one batch's counts.
-        if not hadoop_path_exists(s, target_path):
-            merged = delta
-        else:
-            prev = s.read.parquet(target_path)
-            head = prev.select(
-                F.max("last_batch").alias("b"), F.max("last_ckpt").alias("c")
-            ).head()
-            _check_ledger_ckpt(head.c, ckpt, target_path)
-            if head.b is not None and batch_id <= head.b:
-                return  # replayed batch: the ledger makes it a no-op
-            merged = countmin_merge(
-                prev.drop("last_batch", "last_ckpt"), delta
-            )
-        replace_contents(
-            merged.withColumn("last_batch", F.lit(batch_id)).withColumn(
-                "last_ckpt", F.lit(_norm_ckpt(ckpt))
-            ),
-            target_path,
-        )
-        n_applied["n"] += 1
+        return delta if prev is None else countmin_merge(prev, delta)
 
-    src = _staged_events_stream(spark, d, src_path)
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if default_ckpt and fail_after_batches is None:
-        # fresh-uuid checkpoint: nothing can resume from it; reclaim
-        # the tmpfs state/offset logs (r7 review: bench loops leaked)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
-
-
-def stream_lifetime_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user lifetime stats via ``transformWithStateInPandas`` — the
-    MODERN custom-state API (Spark 4 StatefulProcessor: typed state
-    handles, TTL, timers, RocksDB-only) beside q32's classic
-    ``applyInPandasWithState``.  ValueState holds (n, sum) per user;
-    each micro-batch emits the updated totals (update semantics), and
-    the final answer per user is the row with the maximal monotone
-    count — which equals the batch groupBy (the oracle).
-
-    transformWithState requires the RocksDB state store, so this query
-    pins the provider for its own drain regardless of the session
-    default (the in-heap default stays for everything else)."""
-    try:  # transformWithState speaks protobuf to the JVM driver worker
-        from google.protobuf import descriptor  # noqa: F401
-    except Exception as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "runtime, which this environment does not provide (same "
-            "env-gated posture as the Kafka connector); q32's "
-            "applyInPandasWithState path covers custom state without it."
-        ) from e
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class LifetimeStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n long, s double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._agg.get()
-            n, s = (prev[0], prev[1]) if prev else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                s += float(pdf["value"].sum())
-            self._agg.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    src = stream_events(spark, sf_dir)
-    out = src.groupBy("user_id").transformWithStateInPandas(
-        LifetimeStats(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        drained = run_to_memory_available_now(out, output_mode="update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (
-        drained.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select(
-            "user_id",
-            "n_events",
-            F.round("sum_value", 2).alias("sum_value"),
-        )
+    return _maintain_table(
+        spark, sf_dir, "cms", merge, target_path, checkpoint, fail_after_batches,
+        ledger=True,
     )
 
 
@@ -1160,7 +1055,7 @@ def stream_sliding_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the oracle keeps them; see the query docstring)."""
     return run_to_memory_available_now(
         sliding_wau_pipeline(stream_events(spark, sf_dir))
-    )
+    ).frame
 
 
 def sliding_wau_pipeline(src: DataFrame) -> DataFrame:
@@ -1222,29 +1117,8 @@ def stream_binned_counts(
     stream_countmin).  The maintained table is the input every
     distribution monitor (PSI drift, q162) reads for free at any
     moment — the monitoring loop never rescans history."""
-    from ..sources.catalog import recover_swap, replace_contents
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir("psidir", _expand_links("events", src_path))
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_psi_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    recover_swap(spark, target_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_psi_{uuid.uuid4().hex[:8]}"
-    )
-
-    n_applied = {"n": 0}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if (
-            fail_after_batches is not None
-            and n_applied["n"] >= fail_after_batches
-        ):
-            raise RuntimeError("injected sink crash (fail_after_batches)")
-        s = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         delta = (
             batch.select(
                 "event_type",
@@ -1255,46 +1129,18 @@ def stream_binned_counts(
             .groupBy("event_type", "bin")
             .agg(F.count("*").alias("n"))
         )
-        # Only the first-batch missing-target case may fall back to
-        # merged = delta; any OTHER read failure must propagate so the
-        # checkpoint retries the batch instead of silently discarding
-        # all accumulated state (a transient FS error would otherwise
-        # reset the counts to one batch's worth).
-        if not hadoop_path_exists(s, target_path):
-            merged = delta
-        else:
-            prev = s.read.parquet(target_path)
-            head = prev.select(
-                F.max("last_batch").alias("b"), F.max("last_ckpt").alias("c")
-            ).head()
-            _check_ledger_ckpt(head.c, ckpt, target_path)
-            if head.b is not None and batch_id <= head.b:
-                return
-            merged = (
-                prev.drop("last_batch", "last_ckpt")
-                .unionByName(delta)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        replace_contents(
-            merged.withColumn("last_batch", F.lit(batch_id)).withColumn(
-                "last_ckpt", F.lit(_norm_ckpt(ckpt))
-            ),
-            target_path,
+        if prev is None:
+            return delta
+        return (
+            prev.unionByName(delta)
+            .groupBy("event_type", "bin")
+            .agg(F.sum("n").alias("n"))
         )
-        n_applied["n"] += 1
 
-    src = _staged_events_stream(spark, d, src_path)
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain_table(
+        spark, sf_dir, "psi", merge, target_path, checkpoint, fail_after_batches,
+        ledger=True,
     )
-    q.awaitTermination()
-    if default_ckpt and fail_after_batches is None:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
 
 
 def stream_bitmap_dau(
@@ -1313,18 +1159,8 @@ def stream_bitmap_dau(
     reason q69's latest-wins CDC needs none).  State is
     days x |id-space|/64 words regardless of event volume, and the
     DAU readout is a popcount sum off the maintained table."""
-    from ..sources.catalog import recover_swap, replace_contents
 
-    src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir("daudir", _expand_links("events", src_path))
-    if target_path is None:
-        target_path = os.path.join(
-            _scratch_dir(), f"rs_dau_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-        )
-    recover_swap(spark, target_path)
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
+    def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         delta = (
             batch.select(
                 F.floor(F.unix_timestamp("ts") / F.lit(86400))
@@ -1338,33 +1174,14 @@ def stream_bitmap_dau(
             .groupBy("day", "w")
             .agg(F.bit_or("bit").alias("bits"))
         )
-        # First batch only: no target yet.  Other read errors propagate
-        # (see stream_binned_counts) — a swallowed transient failure
-        # here would OR one batch's bits over an empty table and lose
-        # every previously-set bit.
-        if not hadoop_path_exists(s, target_path):
-            merged = delta
-        else:
-            prev = s.read.parquet(target_path)
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("day", "w")
-                .agg(F.bit_or("bits").alias("bits"))
-            )
-        replace_contents(merged, target_path)
+        if prev is None:
+            return delta
+        return (
+            prev.unionByName(delta)
+            .groupBy("day", "w")
+            .agg(F.bit_or("bits").alias("bits"))
+        )
 
-    src = _staged_events_stream(spark, d, src_path)
-    default_ckpt = checkpoint is None
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_rs_dau_{uuid.uuid4().hex[:8]}"
+    return _maintain_table(
+        spark, sf_dir, "dau", merge, target_path, checkpoint, ledger=False
     )
-    q = (
-        src.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if default_ckpt:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(target_path)

@@ -128,9 +128,10 @@ def test_cdc_upsert_recovers_from_sink_crash(spark, sf_dir, tmp_path):
     target = str(tmp_path / "cdc_target")
     ckpt = str(tmp_path / "cdc_ckpt")
     # run 1: crashes after one applied batch (injected sink failure)
-    stream_cdc_upsert(
-        spark, sf_dir, target_path=target, checkpoint=ckpt, fail_after_batches=1
-    )
+    with pytest.raises(Exception, match="injected sink crash"):
+        stream_cdc_upsert(
+            spark, sf_dir, target_path=target, checkpoint=ckpt, fail_after_batches=1
+        )
     # run 2: same checkpoint + target -> resumes and completes
     recovered = stream_cdc_upsert(spark, sf_dir, target_path=target, checkpoint=ckpt)
     clean = stream_cdc_upsert(spark, sf_dir)  # fresh uninterrupted run
@@ -153,9 +154,10 @@ def test_cdc_recovery_through_interrupted_swap(spark, sf_dir, tmp_path):
 
     target = str(tmp_path / "cdc_target")
     ckpt = str(tmp_path / "cdc_ckpt")
-    stream_cdc_upsert(
-        spark, sf_dir, target_path=target, checkpoint=ckpt, fail_after_batches=1
-    )
+    with pytest.raises(Exception, match="injected sink crash"):
+        stream_cdc_upsert(
+            spark, sf_dir, target_path=target, checkpoint=ckpt, fail_after_batches=1
+        )
     # simulate the mid-swap crash state: dst missing, (old, tmp) pair present
     tok = "cafe0001"
     shutil.copytree(target, f"{target}__swap_tmp_{tok}")
@@ -188,7 +190,7 @@ def test_stream_countmin_recovers_from_sink_crash(spark, sf_dir, tmp_path):
 
     target = str(tmp_path / "cms_target")
     ckpt = str(tmp_path / "cms_ckpt")
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="injected sink crash"):
         stream_countmin(
             spark, sf_dir, target_path=target, checkpoint=ckpt,
             fail_after_batches=0,
@@ -349,7 +351,7 @@ def test_stream_binned_counts_recovers_from_sink_crash(spark, sf_dir, tmp_path):
 
     target = str(tmp_path / "psi_target")
     ckpt = str(tmp_path / "psi_ckpt")
-    with pytest.raises(Exception):
+    with pytest.raises(Exception, match="injected sink crash"):
         stream_binned_counts(
             spark, sf_dir, target_path=target, checkpoint=ckpt,
             fail_after_batches=0,

@@ -284,12 +284,20 @@ def test_default_checkpoints_are_reclaimed(spark, sf_dir):
 
     from real_time_stream_processing_engine_spark.streaming.runner import (
         _scratch_dir,
+        stream_binned_counts,
         stream_bitmap_dau,
     )
 
     before = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_dau_*")))
     stream_bitmap_dau(spark, sf_dir).collect()
     after = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_dau_*")))
+    assert after <= before
+    # a crashed drain cannot be resumed from a checkpoint the caller
+    # never saw, so that one is reclaimed too
+    before = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_psi_*")))
+    with pytest.raises(Exception, match="injected sink crash"):
+        stream_binned_counts(spark, sf_dir, fail_after_batches=0)
+    after = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_psi_*")))
     assert after <= before
 
 

@@ -105,20 +105,11 @@ def test_sliding_wau_multibatch_matches_batch_oracle(spark, tmp_path):
         .option("latestFirst", "false")
         .parquet(d)
     )
-    got = {
-        r.day: r.wau
-        for r in run_to_memory_available_now(
-            sliding_wau_pipeline(src)
-        ).collect()
-    }
+    report = run_to_memory_available_now(sliding_wau_pipeline(src))
+    got = {r.day: r.wau for r in report.frame.collect()}
     # the engine dropped nothing: every later-day cover row cleared the
     # (correctly sized) watermark
-    assert (
-        run_to_memory_available_now.last_state_metrics[
-            "numRowsDroppedByWatermark"
-        ]
-        == 0
-    )
+    assert report.state["numRowsDroppedByWatermark"] == 0
     assert got == _batch_oracle(spark)
     # shape spot-checks: day 4 covers users {1,2,3,4}; the ramp-down
     # tail (day 12 = last day + 6) sees only day-6 contributors

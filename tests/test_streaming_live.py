@@ -20,6 +20,7 @@ import pytest
 
 from real_time_stream_processing_engine_spark.streaming.runner import (
     run_continuous,
+    stream_grouped_counts,
     stream_kafka,
     stream_rate,
     stream_socket,
@@ -164,31 +165,6 @@ def test_kafka_source_gated_with_actionable_error(spark):
             stream_kafka(spark, "localhost:9092", "t")
 
 
-def test_rocksdb_state_store_opt_in(spark, monkeypatch):
-    """SPARK_GRAFT_STATE_STORE=rocksdb runs the drain on the RocksDB
-    provider (the state-outgrows-the-heap posture) with identical
-    results, and restores the provider conf afterwards."""
-    from pyspark.sql import functions as F
-
-    from real_time_stream_processing_engine_spark.streaming.runner import (
-        stream_grouped_counts,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    got = {r.event_type: r.cnt for r in stream_grouped_counts(spark, SF_SMOKE).collect()}
-    batch = {
-        r.event_type: r.cnt
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert got == batch
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None) is None
-    )
-
-
 def test_q32_stateful_stream_end_equals_batch(spark):
     """Pins COVERAGE.md's claim: the applyInPandasWithState running
     count per key equals the batch groupBy().count() at stream end."""
@@ -222,11 +198,25 @@ def test_observed_metrics_account_for_every_tuple(spark, sf_dir):
         "rs_ingest", F.count(F.lit(1)).alias("n_tuples")
     )
     agg = src.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    out = run_to_memory_available_now(agg)
+    report = run_to_memory_available_now(agg)
     total_rows = load_table(spark, sf_dir, "events").count()
-    obs = run_to_memory_available_now.last_observed
-    assert obs["rs_ingest"]["n_tuples"] == total_rows
-    assert sum(r["cnt"] for r in out.collect()) == total_rows
+    assert report.observed["rs_ingest"]["n_tuples"] == total_rows
+    assert sum(r["cnt"] for r in report.frame.collect()) == total_rows
+    # the per-batch phase split is summed over the drain too
+    assert report.phases_ms["triggerExecution"] > 0
+    assert {"addBatch", "walCommit", "commitOffsets"} <= report.phases_ms.keys()
+
+
+def test_drain_drops_its_memory_sink_view(spark):
+    """A drain leaves no memory-sink view in the session catalog; the
+    frame it returns still reads the sink's rows."""
+    got = stream_grouped_counts(spark, SF_SMOKE).collect()
+    assert sum(r.cnt for r in got) == (
+        spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
+    )
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("rs_mem_")
+    ]
 
 
 def test_stream_countmin_equals_batch_sketch(spark, sf_dir):
@@ -250,32 +240,3 @@ def test_stream_countmin_equals_batch_sketch(spark, sf_dir):
     a = sorted(map(tuple, streamed.collect()))
     b = sorted(map(tuple, batch.collect()))
     assert a == b
-
-
-def test_transform_with_state_lifetime_stats_when_available(spark, sf_dir):
-    """The modern StatefulProcessor path (transformWithStateInPandas)
-    equals the batch groupBy — runs wherever google.protobuf exists
-    (env-gated here exactly like the Kafka connector; the classic
-    applyInPandasWithState path q32 covers custom state without it)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from real_time_stream_processing_engine_spark.sources.readers import load_table
-    from real_time_stream_processing_engine_spark.streaming.runner import (
-        stream_lifetime_stats_tws,
-    )
-
-    got = sorted(
-        map(tuple, stream_lifetime_stats_tws(spark, sf_dir).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            load_table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("sum_value"),
-            )
-            .collect(),
-        )
-    )
-    assert got == want

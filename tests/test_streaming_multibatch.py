@@ -212,13 +212,11 @@ def test_binned_counts_crash_mid_multibatch_recovers(spark, multi_sf, tmp_path, 
 
     target = str(tmp_path / "bins_target")
     ckpt = str(tmp_path / "bins_ckpt")
-    try:
+    with pytest.raises(Exception, match="injected sink crash"):
         stream_binned_counts(
             spark, multi_sf, target_path=target, checkpoint=ckpt,
             fail_after_batches=2,
         )
-    except Exception:
-        pass  # injected sink crash
     recovered = stream_binned_counts(
         spark, multi_sf, target_path=target, checkpoint=ckpt
     )

@@ -107,20 +107,13 @@ def test_tumbling_drops_beyond_watermark_keeps_within(spark, tmp_path):
     d = _stage_stream_dir(
         spark, tmp_path, [ON_TIME, BUFFER, TOO_LATE, IN_HORIZON, FLUSH]
     )
-    got = {
-        (r.ws, r.event_type): r.cnt
-        for r in run_to_memory_available_now(
-            _tumbling(_read_stream(spark, d), streaming=True),
-            output_mode="append",
-        ).collect()
-    }
-    # the engine itself accounted the drop
-    assert (
-        run_to_memory_available_now.last_state_metrics[
-            "numRowsDroppedByWatermark"
-        ]
-        == 1
+    report = run_to_memory_available_now(
+        _tumbling(_read_stream(spark, d), streaming=True),
+        output_mode="append",
     )
+    got = {(r.ws, r.event_type): r.cnt for r in report.frame.collect()}
+    # the engine itself accounted the drop
+    assert report.state["numRowsDroppedByWatermark"] == 1
     # batch oracle over exactly the rows the policy keeps (flush's own
     # window is WITHHELD by append mode: still inside the final horizon)
     kept = _df(spark, ON_TIME + BUFFER + IN_HORIZON)
@@ -159,21 +152,14 @@ def test_hopping_drops_and_keeps_per_overlapping_window(spark, tmp_path):
         .agg(F.count("*").alias("cnt"))
         .select(F.date_format("w.start", "HH:mm").alias("ws"), "event_type", "cnt")
     )
-    got = {
-        (r.ws, r.event_type): r.cnt
-        for r in run_to_memory_available_now(src, output_mode="append").collect()
-    }
+    report = run_to_memory_available_now(src, output_mode="append")
+    got = {(r.ws, r.event_type): r.cnt for r in report.frame.collect()}
     assert got[("10:00", "late")] == 1 and got[("10:30", "late")] == 1
     assert not any(ws in ("01:30", "02:00") for ws, _ in got)
     # the drop counter ticks per (event x window): the too-late row
     # explodes into its 2 overlapping windows BEFORE the stateful op,
     # and both land below the watermark
-    assert (
-        run_to_memory_available_now.last_state_metrics[
-            "numRowsDroppedByWatermark"
-        ]
-        == 2
-    )
+    assert report.state["numRowsDroppedByWatermark"] == 2
 
 
 def test_dedup_within_watermark_across_batches(spark, tmp_path):
@@ -193,6 +179,6 @@ def test_dedup_within_watermark_across_batches(spark, tmp_path):
         r.user_id
         for r in run_to_memory_available_now(
             deduped, output_mode="append"
-        ).collect()
+        ).frame.collect()
     )
     assert got == [1, 2, 3]
