@@ -20,6 +20,9 @@ leader-side log file.  One-shot mode: pass the command as argv, e.g.
 from __future__ import annotations
 
 import sys
+from typing import Literal
+
+Outcome = Literal["ok", "error", "exit"]
 
 HELP = """\
 Commands:
@@ -63,66 +66,65 @@ def _print_df(df, out) -> None:
 
 
 def _ensure_tables(spark, out) -> None:
-    if getattr(_ensure_tables, "done", False):
-        return
+    """Register the testdata tables unless the session already has them
+    (from an earlier ``sql`` or ``use``); the session catalog is the
+    one record of what is registered."""
     import os
 
+    from . import TABLES
     from .sources.readers import register_tables
 
+    if any(spark.catalog.tableExists(t) for t in TABLES):
+        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     names = register_tables(spark, sf_dir)
     print(f"registered {len(names)} tables from {sf_dir}", file=out)
-    _ensure_tables.done = True
 
 
-def _dispatch(spark, line: str, out=sys.stdout) -> bool:
-    """Execute one REPL line; returns False when the loop should end.
-    Records whether the line errored on ``_dispatch.failed`` so one-shot
-    mode can exit non-zero (the REPL itself always continues)."""
-    _dispatch.failed = False
+def _dispatch(spark, line: str, out=sys.stdout) -> Outcome:
+    """Execute one REPL line and say how it went: ``"exit"`` ends the
+    loop, ``"error"`` makes one-shot mode exit non-zero (the REPL itself
+    always continues), ``"ok"`` otherwise."""
     from .operators.parser import run_command
     from .sources import catalog
 
     line = line.strip()
     if not line:
-        return True
+        return "ok"
     word = line.split(None, 1)[0].lower()
     if word in ("exit", "quit"):
-        return False
+        return "exit"
     if word == "help":
         print(HELP, file=out)
-        return True
+        return "ok"
     try:
         if word == "ls":
             for e in catalog.ls(spark, _arg(line, "ls <path>")):
                 kind = "dir " if e["is_dir"] else "file"
                 print(f"{kind} {e['bytes']:>12} {e['path']}", file=out)
-            return True
+            return "ok"
         if word == "merge":
             catalog.merge(spark, _arg(line, "merge <path>"))
             print("merged", file=out)
-            return True
+            return "ok"
         if word == "rainstorm":
             _print_df(run_command(spark, line), out)
-            return True
+            return "ok"
         if word == "sql":
+            query = _arg(line, "sql <query>")
             _ensure_tables(spark, out)
-            _print_df(spark.sql(_arg(line, "sql <query>")), out)
-            return True
+            _print_df(spark.sql(query), out)
+            return "ok"
         if word == "use":
             from .sources.readers import register_tables
 
             names = register_tables(spark, _arg(line, "use <sf_dir>"))
-            _ensure_tables.done = True
             print(f"registered {len(names)} tables", file=out)
-            return True
+            return "ok"
         print(f"unknown command {word!r} — try 'help'", file=out)
-        _dispatch.failed = True
     except Exception as e:  # the REPL survives bad input, like the reference's
-        _dispatch.failed = True
         print(f"error: {e}", file=out)
-        return True
-    return True
+    return "error"
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -133,15 +135,14 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     try:
         if argv:  # one-shot: command given on the command line
-            _dispatch(spark, " ".join(argv))
-            return 1 if _dispatch.failed else 0
+            return 1 if _dispatch(spark, " ".join(argv)) == "error" else 0
         print("RainStorm-on-Spark REPL — 'help' for commands", file=sys.stderr)
         while True:
             try:
                 line = input("rainstorm> ")
             except EOFError:
                 break
-            if not _dispatch(spark, line):
+            if _dispatch(spark, line) == "exit":
                 break
         return 0
     finally:

@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame
 
 def pandas_parallelism(df: DataFrame) -> int:
     """Partition count for a pandas-boundary (applyInPandas /
-    mapInPandas) stage: half the session's default parallelism, floor 1
-    (env override ``SPARK_GRAFT_PANDAS_SHUFFLE``).
+    mapInPandas) stage: half the session's default parallelism, floor 1.
 
     Each such task runs as a JVM thread PLUS a Python worker process,
     both runnable while Arrow batches stream between them — tasks ==
@@ -46,11 +45,7 @@ def pandas_parallelism(df: DataFrame) -> int:
     grouped-MAD stage (q172, local[32], sf0.1): 32 partitions 4.5 s,
     16 partitions 0.9 s, same results.  cores/2 keeps (JVM + Python)
     pairs == cores; the same arithmetic holds per-executor on a real
-    cluster, and the env knob sizes it independently when the Python
-    side is I/O-bound rather than CPU-bound."""
-    env = os.environ.get("SPARK_GRAFT_PANDAS_SHUFFLE")
-    if env:
-        return max(1, int(env))
+    cluster."""
     return max(1, df.sparkSession.sparkContext.defaultParallelism // 2)
 
 

@@ -3,7 +3,7 @@ processed by Arrow-batched ``mapInPandas``.
 
 The pattern for image/audio/video at 100 TB: store the payload as a
 ``binary`` column (or a pointer column to object storage) next to typed
-metadata; decode/resize/frame-sample runs as a ``mapInPandas`` stage so
+metadata; decode and feature extraction run as a ``mapInPandas`` stage so
 bytes move driver-free, Arrow-batched, one Python worker per core, and
 the output schema is declared up front so everything downstream is
 ordinary columnar Spark.
@@ -11,9 +11,8 @@ ordinary columnar Spark.
 Decode support is two-tier:
 
 - REAL codecs for the uncompressed raster formats a pure-numpy decoder
-  can handle honestly — PPM/PGM (P6/P5) and 24-bit uncompressed BMP —
-  plus nearest-neighbor resize and PPM re-encode
-  (:func:`decode_image`, :func:`resize_image`, :func:`encode_ppm`).
+  can handle honestly — PPM/PGM (P6/P5) and 24-bit uncompressed BMP
+  (:func:`real_decode`), plus a PPM re-encoder (:func:`encode_ppm`).
 - compressed formats (JPEG/PNG/video/audio) still raise
   ``NotImplementedError`` from :func:`real_decode` — their codecs
   (PIL/ffmpeg) are not in this container.  ``fake_decode_features``
@@ -133,16 +132,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return rows[:, :, ::-1].copy()  # BGR -> RGB
 
 
-def resize_image(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize via numpy index gather — the real
-    thumbnail operation for the decodable formats (a production stack
-    swaps in an area/bilinear kernel; the pipeline shape is identical)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 def real_decode(payload: bytes) -> np.ndarray:
     """Decode a binary image payload to an (h, w, c) uint8 array.
 
@@ -194,103 +183,6 @@ def extract_features(
     shuffle is cheaper than idle or thrashing Python workers."""
     with_payload = _payloads(docs, text_col, min_parallelism)
     return with_payload.mapInPandas(fake_decode_features, FEATURE_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_feat", T.StringType()),
-    ]
-)
-
-THUMB_SIZE = 64
-
-THUMB_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("thumb", T.BinaryType()),
-        T.StructField("thumb_len", T.IntegerType()),
-    ]
-)
-
-
-def make_frame_sampler(n_frames: int = 4):
-    """Row-expanding decode: one binary payload -> ``n_frames`` frame
-    rows (the video frame-sampling shape: mapInPandas is a flatMap over
-    Arrow batches, so one input row may yield many output rows).
-
-    DETERMINISTIC FAKE: frames are equal byte-slices of the payload,
-    "featurized" as md5 prefixes.  A real sampler swaps the slice+md5
-    body for pyav keyframe extraction; schema and batching stay put."""
-    if n_frames < 1:
-        # fail once at the driver: n_frames=0 would silently emit zero
-        # rows per document with a "successful" job (r7 review — the
-        # guard real_audio_frames/sample_video_frames already carry)
-        raise ValueError(f"n_frames must be >= 1, got {n_frames}")
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, feats = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                step = max(1, len(raw) // n_frames)
-                for i in range(n_frames):
-                    chunk = raw[i * step : (i + 1) * step] or raw[-step:]
-                    ids.append(int(doc_id))
-                    idxs.append(i)
-                    feats.append(hashlib.md5(chunk).hexdigest()[:8])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_feat": feats,
-                }
-            )
-
-    return sample
-
-
-def sample_frames(
-    docs: DataFrame,
-    text_col: str = "text",
-    n_frames: int = 4,
-    min_parallelism: int | None = None,
-) -> DataFrame:
-    """Frame-sampling stage over binary payloads (video posture)."""
-    with_payload = _payloads(docs, text_col, min_parallelism)
-    return with_payload.mapInPandas(make_frame_sampler(n_frames), FRAME_SCHEMA)
-
-
-def fake_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """1:1 binary->binary decode stage (the image-resize shape: output
-    is again an opaque binary column plus typed metadata).
-
-    DETERMINISTIC FAKE: the "thumbnail" is the md5 digest cycled to
-    THUMB_SIZE bytes — fixed-size output like a real WxH thumbnail, and
-    reproducible for tests.  A real impl swaps the body for
-    PIL.Image.open(...).resize(...).tobytes()."""
-    for pdf in batches:
-        thumbs = []
-        for payload in pdf["payload"]:
-            d = hashlib.md5(bytes(payload)).digest()
-            reps = -(-THUMB_SIZE // len(d))
-            thumbs.append((d * reps)[:THUMB_SIZE])
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "thumb": thumbs,
-                "thumb_len": pd.Series([THUMB_SIZE] * len(thumbs), dtype="int32"),
-            }
-        )
-
-
-def resize_images(
-    docs: DataFrame, text_col: str = "text", min_parallelism: int | None = None
-) -> DataFrame:
-    """Resize stage over binary payloads (image posture)."""
-    with_payload = _payloads(docs, text_col, min_parallelism)
-    return with_payload.mapInPandas(fake_resize, THUMB_SCHEMA)
 
 
 IMAGE_SCHEMA = T.StructType(
@@ -351,50 +243,6 @@ def extract_image_features(
     if min_parallelism:
         df = df.repartition(min_parallelism)
     return df.mapInPandas(real_image_features, IMAGE_SCHEMA)
-
-
-def make_real_resizer(out_w: int = 8, out_h: int = 8):
-    """Binary->binary REAL thumbnailer: decode (PPM/PGM/BMP) ->
-    nearest-neighbor resize -> re-encode as PPM/PGM.  Undecodable
-    payloads yield a NULL thumb (quarantine, never job failure)."""
-
-    def resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, thumbs, lens = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                ids.append(int(doc_id))
-                try:
-                    thumb = encode_ppm(
-                        resize_image(real_decode(bytes(payload)), out_w, out_h)
-                    )
-                    thumbs.append(thumb)
-                    lens.append(len(thumb))
-                except Exception:
-                    thumbs.append(None)
-                    lens.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "thumb": thumbs,
-                    "thumb_len": pd.Series(lens, dtype="Int32"),
-                }
-            )
-
-    return resize_batch
-
-
-def resize_images_real(
-    images: DataFrame,
-    payload_col: str = "payload",
-    out_w: int = 8,
-    out_h: int = 8,
-    min_parallelism: int | None = None,
-) -> DataFrame:
-    """Real thumbnail stage over decodable binary payloads."""
-    df = images.select("doc_id", F.col(payload_col).alias("payload"))
-    if min_parallelism:
-        df = df.repartition(min_parallelism)
-    return df.mapInPandas(make_real_resizer(out_w, out_h), THUMB_SCHEMA)
 
 
 # ---------------------------------------------------------------- audio (WAV)
@@ -502,23 +350,28 @@ def real_audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
         )
 
 
+def wav_header(n_data_bytes: int, rate: int = 8000, n_ch: int = 1) -> bytes:
+    """The 44-byte RIFF/WAVE header of a PCM-16 clip whose sample data
+    is ``n_data_bytes`` long (the queries that build WAV payloads as a
+    JVM binary projection prepend exactly these bytes)."""
+    block = 2 * n_ch
+    return (
+        b"RIFF" + (36 + n_data_bytes).to_bytes(4, "little") + b"WAVE"
+        + b"fmt " + (16).to_bytes(4, "little")
+        + (1).to_bytes(2, "little") + n_ch.to_bytes(2, "little")
+        + rate.to_bytes(4, "little") + (rate * block).to_bytes(4, "little")
+        + block.to_bytes(2, "little") + (16).to_bytes(2, "little")
+        + b"data" + n_data_bytes.to_bytes(4, "little")
+    )
+
+
 def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
     """Minimal PCM-16 mono/stereo WAV encoder (bit-exact round-trip
     partner of :func:`decode_wav`)."""
     if samples.ndim == 1:
         samples = samples[:, None]
-    n_ch = samples.shape[1]
     data = samples.astype("<i2").tobytes()
-    block = 2 * n_ch
-    hdr = (
-        b"RIFF" + (36 + len(data)).to_bytes(4, "little") + b"WAVE"
-        + b"fmt " + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + n_ch.to_bytes(2, "little")
-        + rate.to_bytes(4, "little") + (rate * block).to_bytes(4, "little")
-        + block.to_bytes(2, "little") + (16).to_bytes(2, "little")
-        + b"data" + len(data).to_bytes(4, "little")
-    )
-    return hdr + data
+    return wav_header(len(data), rate, samples.shape[1]) + data
 
 
 def extract_audio_features(

@@ -175,32 +175,6 @@ def stratified_fixed_k(
     return out.drop("_sample_rk")
 
 
-def temperature_rates(
-    counts: dict[str, int], alpha: float, budget: int
-) -> dict[str, float]:
-    """Temperature-based mixture weights (the multilingual data-mixing
-    formula): sample group g with probability proportional to
-    ``n_g^alpha``, scaled to an expected ``budget`` rows total.
-
-    alpha=1 keeps natural proportions (every group gets the same rate);
-    alpha=0 equalizes groups (rates proportional to 1/n_g); 0<alpha<1
-    is the standard boilerplate-language flattening.  Rates cap at 1 —
-    upsampling past a group's size means repetition, which is a
-    different operator (and a different statistical decision) than a
-    filter: ``repeat_rows``.  Driver-side pure math over the tiny
-    per-group count table; feed the result to ``mixture_sample``."""
-    if not counts:
-        raise ValueError("counts must be non-empty")
-    if any(n <= 0 for n in counts.values()):
-        raise ValueError("group counts must be positive")
-    if budget <= 0:
-        raise ValueError(f"budget must be positive, got {budget}")
-    z = sum(n**alpha for n in counts.values())
-    return {
-        g: min(1.0, budget * (n**alpha / z) / n) for g, n in counts.items()
-    }
-
-
 def mixture_sample(
     df: DataFrame,
     rates: dict[str, float],
@@ -241,8 +215,8 @@ def repeat_rows(
     out: str = "epoch",
 ) -> DataFrame:
     """Deterministic per-group repetition — the upsampling half of data
-    mixing (``temperature_rates`` caps rates at 1 because repeating is
-    a different decision; this is that operator).  A row in group g
+    mixing (a sampling rate caps at 1 because repeating is a different
+    decision; this is that operator).  A row in group g
     with factor f appears ``floor(f)`` times, plus one more iff its
     md5(seed|id) draw falls under ``frac(f)`` — so a factor of 2.5
     emits every row twice and an unbiased, retry-stable half of rows a

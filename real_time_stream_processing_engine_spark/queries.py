@@ -79,6 +79,28 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
     return a.join(b, "l_orderkey").filter(F.col("u") < F.col("v")).select("u", "v")
 
 
+def _daily_revenue(orders: DataFrame, alias: str) -> DataFrame:
+    """Order revenue per day as exact integer cents: ``day`` (epoch
+    days of ``o_orderdate``) and ``alias`` (sum of half-up rounded
+    ``o_totalprice * 100``) — the ONE definition the day-grain
+    time-series queries build on, like :func:`_copurchase_edges`."""
+    return orders.groupBy(
+        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
+        .cast("long")
+        .alias("day")
+    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias(alias))
+
+
+def _monthly_revenue(orders: DataFrame) -> DataFrame:
+    """The month-grain twin of :func:`_daily_revenue`: ``month``
+    (yyyymm of ``o_orderdate``) and ``cents``."""
+    return orders.groupBy(
+        (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
+        .cast("long")
+        .alias("month")
+    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("cents"))
+
+
 # --------------------------------------------------------------------------
 # Reference surface: O1-O10 (SURVEY.md §2.2)
 # --------------------------------------------------------------------------
@@ -1761,10 +1783,7 @@ def q63_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data mixing: per-language deterministic Bernoulli resampling —
     flatten dominant English to 25%, French to 50%, keep the rest —
     ONE scan-side CASE-threshold filter on the shared md5 draw (zero
-    exchanges, plan-pinned).  ``temperature_rates`` computes such a
-    rate table from group counts and a temperature alpha (the
-    multilingual n^alpha formula, unit-pinned); the query pins the
-    mixture filter itself with fixed rates so the oracle is
+    exchanges, plan-pinned).  The rates are fixed so the oracle is
     scale-independent."""
     from .operators.sampling import mixture_sample
 
@@ -4453,18 +4472,10 @@ def q115_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5 hex in SQL, so a hash match proves the DECODER (chunk walk,
     sample layout, sign handling) — not a fake.  Compressed audio
     (mp3/ogg) stays behind the same env-gated boundary as JPEG/PNG."""
-    from .operators.multimodal import extract_audio_features
+    from .operators.multimodal import extract_audio_features, wav_header
 
     docs = load_table(spark, sf_dir, "documents")
-    data_len = 16
-    hdr = (
-        b"RIFF" + (36 + data_len).to_bytes(4, "little") + b"WAVE"
-        + b"fmt " + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-        + (8000).to_bytes(4, "little") + (16000).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-        + b"data" + data_len.to_bytes(4, "little")
-    )
+    hdr = wav_header(16)
     payloads = docs.select(
         "doc_id",
         F.concat(F.lit(hdr), F.unhex(F.md5("text"))).alias("payload"),
@@ -6023,18 +6034,10 @@ def q140_audio_frame_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the same samples from the md5 bytes in SQL, proving
     the decoder's chunk walk, sample order, and sign handling frame by
     frame."""
-    from .operators.multimodal import extract_audio_frames
+    from .operators.multimodal import extract_audio_frames, wav_header
 
     docs = load_table(spark, sf_dir, "documents")
-    data_len = 16
-    hdr = (
-        b"RIFF" + (36 + data_len).to_bytes(4, "little") + b"WAVE"
-        + b"fmt " + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-        + (8000).to_bytes(4, "little") + (16000).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-        + b"data" + data_len.to_bytes(4, "little")
-    )
+    hdr = wav_header(16)
     payloads = docs.select(
         "doc_id",
         F.concat(F.lit(hdr), F.unhex(F.md5("text"))).alias("payload"),
@@ -9317,18 +9320,10 @@ def q188_decode_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame
     payload misclassified, no bad one silently decoded.  The
     operational posture (bad bytes at 100 TB are a statistic, not a
     job failure), certified like any other query."""
-    from .operators.multimodal import extract_audio_features
+    from .operators.multimodal import extract_audio_features, wav_header
 
     docs = load_table(spark, sf_dir, "documents")
-    data_len = 16
-    hdr = (
-        b"RIFF" + (36 + data_len).to_bytes(4, "little") + b"WAVE"
-        + b"fmt " + (16).to_bytes(4, "little")
-        + (1).to_bytes(2, "little") + (1).to_bytes(2, "little")
-        + (8000).to_bytes(4, "little") + (16000).to_bytes(4, "little")
-        + (2).to_bytes(2, "little") + (16).to_bytes(2, "little")
-        + b"data" + data_len.to_bytes(4, "little")
-    )
+    hdr = wav_header(16)
     corrupt = (
         F.conv(F.substring(F.md5("text"), 1, 2), 16, 10).cast("long") % 5 == 0
     )
@@ -10565,12 +10560,7 @@ def q207_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     order count — the same justification as q122's spine."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("cents"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "cents")
     t = d.agg(F.sum("cents").alias("tot"), F.count("*").alias("nd"))
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -11311,12 +11301,7 @@ def q219_seasonal_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullness, so both engines drop identical rows."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
-        .cast("long")
-        .alias("month")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("cents"))
+    m = _monthly_revenue(load_table(spark, sf_dir, "orders"))
     wo = Window.orderBy("month")
     wsum = wo.rowsBetween(-5, 5)
     w = m.select(
@@ -11394,12 +11379,7 @@ def q220_ewma_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the 20 lag taps share a single sort, and the
     generated SQL text is fed to BOTH engines so the tap structure
     cannot drift."""
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("cents"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "cents")
     d.createOrReplaceTempView("_ewma_daily")
     return spark.sql(
         f"""
@@ -11449,12 +11429,7 @@ def q221_seasonal_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded window then collapses 68 rows to 12."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
-        .cast("long")
-        .alias("month")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("cents"))
+    m = _monthly_revenue(load_table(spark, sf_dir, "orders"))
     wo = Window.orderBy("month")
     w = m.select(
         "month",
@@ -13018,12 +12993,7 @@ def q243_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, one 7-row reduce."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("x"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "x")
     w = Window.orderBy("day")
     lags = d.select(
         "x", *[F.lag("x", k).over(w).alias(f"l{k}") for k in range(1, 8)]
@@ -15459,12 +15429,7 @@ def q279_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtraction, TakeOrdered(10) with a day tie-break."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("x"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "x")
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -15689,12 +15654,7 @@ def q283_weekday_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     z-score every single week).  The weekday factors are q259's
     index inverted; broadcast 7-row + 1-row joins; DECIMAL/HUGEINT
     against the value-sum-product overflow class."""
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("x"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "x")
     dw = d.select("day", "x", ((F.col("day") + 4) % 7).alias("dow"))
     idx = dw.groupBy("dow").agg(
         F.sum("x").alias("dow_rev"),
@@ -15986,12 +15946,7 @@ def q287_decomposition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal indices."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
-        .cast("long")
-        .alias("month")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("cents"))
+    m = _monthly_revenue(load_table(spark, sf_dir, "orders"))
     wo = Window.orderBy("month")
     w = m.select(
         "month",
@@ -17195,12 +17150,7 @@ def q305_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the last ANSI frame type without a dedicated green entry."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("x"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "x")
     w = Window.orderBy("day").rangeBetween(-6, 0)
     return d.select(
         "day",
@@ -17422,12 +17372,7 @@ def q308_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     view; this is the distributional one."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("x"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "x")
     h = d.groupBy("x").agg(F.count("*").alias("cnt"))
     cum = h.select(
         "x",
@@ -17899,12 +17844,7 @@ def q317_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     census a test table turns into a z-score."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("x"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "x")
     h = d.groupBy("x").agg(F.count("*").alias("cnt"))
     cum = h.select(
         "x",
@@ -17989,12 +17929,7 @@ def q318_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     both ppm-exact."""
     from pyspark.sql import Window
 
-    orders = load_table(spark, sf_dir, "orders")
-    m = orders.groupBy(
-        (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
-        .cast("long")
-        .alias("month")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("cents"))
+    m = _monthly_revenue(load_table(spark, sf_dir, "orders"))
     wo = Window.orderBy("month")
     w = m.select(
         "month",
@@ -18378,12 +18313,7 @@ def q323_sign_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     to q259's weekday index: same question, zero distributional
     assumptions, and incomplete boundary weeks are excluded by an
     exact day-count predicate rather than silently diluted."""
-    orders = load_table(spark, sf_dir, "orders")
-    d = orders.groupBy(
-        F.floor(F.unix_timestamp(F.col("o_orderdate")) / 86400)
-        .cast("long")
-        .alias("day")
-    ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")).alias("x"))
+    d = _daily_revenue(load_table(spark, sf_dir, "orders"), "x")
     wk = d.select(
         F.expr("day DIV 7").alias("week"),
         F.when(((F.col("day") + 4) % 7).isin(0, 6), "we").otherwise("wd").alias(

@@ -287,10 +287,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return convert_ts_cols(df, conv)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register every testdata table present in ``sf_dir`` as a temp
     view (unit-corrected schemas included), making the whole engine
@@ -357,66 +353,4 @@ def read_text_lines(spark: SparkSession, path: str, with_provenance: bool = True
     return df.withColumn(
         "uid", F.md5(F.concat_ws(":", F.col("src_file"), F.col("line_id")))
     )
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    corrupt_col: str = "_corrupt",
-) -> DataFrame:
-    """JSON-lines ingest with an explicit schema — the de-facto wire
-    format of training-data pipelines.
-
-    Scale posture: the schema is REQUIRED (inference is a full extra
-    pass over 100 TB), and malformed lines land in ``corrupt_col``
-    (PERMISSIVE mode) instead of failing the job — callers split the
-    frame on ``corrupt_col IS NULL`` to route rejects to a quarantine
-    sink.  CAVEAT (Spark restriction, r7 review): a query that
-    references ONLY the corrupt column on the raw parsed frame raises
-    AnalysisException — ``.cache()`` the frame (or select at least one
-    data column alongside) before filtering on ``corrupt_col``.  JSONL
-    splits by newline, so unlike multi-line JSON it parallelizes
-    per-block like text.
-    """
-    # build a NEW StructType — StructType.add mutates the caller's schema
-    full = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
-    )
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    )
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines egress (one object per line, partition-parallel).
-    Delegates to :func:`sinks.writers.write_results` — one audited
-    egress path per format (r5 review catch: this was a drift-prone
-    duplicate of the json branch there)."""
-    from ..sinks.writers import write_results
-
-    write_results(df, path, fmt="json", mode=mode)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write ORC — the second columnar interchange format beside
-    parquet (Hive-ecosystem handoffs).  Same pushdown/pruning story:
-    ORC carries column statistics and predicate pushdown, so queries
-    over an ORC copy keep the scan-side behavior the plan tests pin
-    for parquet."""
-    df.write.mode(mode).orc(path)
-
-
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Read ORC with an optional explicit schema (the same
-    no-silent-inference posture as the parquet/CSV/JSONL readers)."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.orc(path)
 

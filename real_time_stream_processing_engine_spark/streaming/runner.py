@@ -187,26 +187,12 @@ def _expand_links(prefix: str, src_path: str) -> dict[str, str]:
     return links
 
 
-def _env_max_files_per_trigger() -> int | None:
-    """Harness knob: SPARK_GRAFT_STREAM_MAX_FILES forces every file-fed
-    stream into N-files-per-micro-batch mode, so the multi-batch
-    differential suite (tests/test_streaming_multibatch.py) can drive
-    the SHIPPED query functions through real micro-batch sequences
-    (watermark advances BETWEEN batches) instead of the one-shot
-    availableNow drain that hid the sliding-WAU watermark bug.
-    Non-positive values mean "unset" (maxFilesPerTrigger must be
-    positive or Spark rejects the stream at start)."""
-    v = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if not v:
-        return None
-    try:
-        n = int(v)
-    except ValueError:
-        raise ValueError(
-            f"SPARK_GRAFT_STREAM_MAX_FILES must be an integer "
-            f"(non-positive means unset), got {v!r}"
-        ) from None
-    return n if n > 0 else None
+# Files per micro-batch forced on every events file stream; None leaves
+# the caller's own choice.  The multi-batch differential suite sets it
+# to 1 so the query functions run through real micro-batch sequences
+# (the watermark advances BETWEEN batches) instead of the one-shot
+# availableNow drain that hid the sliding-WAU watermark bug.
+_FORCED_MAX_FILES: int | None = None
 
 
 def _read_events_stream(
@@ -232,11 +218,10 @@ def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int |
     """File-source stream over the events table (the reference's chunk
     stream, E1).  ``maxFilesPerTrigger`` is the backpressure knob the
     reference lacks (busy-wait blast, ``RainStorm.java:1292-1296``);
-    an explicit value wins over the SPARK_GRAFT_STREAM_MAX_FILES
-    harness override."""
+    an explicit value wins over ``_FORCED_MAX_FILES``."""
     path = os.path.join(sf_dir, "events.parquet")
     if max_files_per_trigger is None:
-        max_files_per_trigger = _env_max_files_per_trigger()
+        max_files_per_trigger = _FORCED_MAX_FILES
     return _read_events_stream(spark, path, _as_stream_dir(path), max_files_per_trigger)
 
 
@@ -269,47 +254,6 @@ def stream_socket(spark: SparkSession, host: str = "localhost", port: int = 9999
     )
 
 
-def stream_kafka(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """Kafka source — the replayable-log feed a production deployment
-    uses where the reference used raw TCP (offset tracking in the
-    checkpoint gives exactly-once, which :func:`stream_socket` cannot).
-
-    GATED: the ``spark-sql-kafka`` connector jar is not bundled with
-    pyspark and this environment installs no packages, so this raises a
-    clear, actionable error when the connector is absent instead of the
-    opaque ``Failed to find data source: kafka`` at query start.  With
-    the connector on the classpath (``spark-submit --packages
-    org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>``) the
-    returned stream carries the standard key/value/topic/partition/
-    offset/timestamp columns."""
-    try:
-        # probe through Spark's context-or-Spark classloader (a jar
-        # added via ADD JAR / spark.jars is visible there but NOT to
-        # the raw system-classloader Class.forName)
-        spark._jvm.org.apache.spark.util.Utils.classForName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider", False, False
-        )
-    except Exception as e:
-        raise RuntimeError(
-            "Kafka connector not on the classpath: launch with "
-            "spark-submit --packages org.apache.spark:spark-sql-kafka-0-10_2.13:"
-            "<spark-version> (or add the jar to spark.jars). "
-            "For a dependency-free live feed use stream_socket/stream_rate."
-        ) from e
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
-
-
 def run_continuous(
     df: DataFrame,
     name: str | None = None,
@@ -329,23 +273,16 @@ def run_continuous(
     Unlike :func:`run_to_memory_available_now` this does NOT drain and
     stop: the processing-time trigger keeps firing until ``stop()``,
     which is the reference's continuous posture.  The caller owns the
-    returned query; a checkpoint dir is created under scratch when not
-    supplied."""
+    returned query.  An explicit ``checkpoint`` is used as given;
+    without one, Spark gives the memory sink a temporary checkpoint of
+    its own and deletes it when the query stops cleanly (a fresh one
+    per start, so a named query never trips over a previous run's
+    offsets)."""
     qname = name or f"rs_live_{uuid.uuid4().hex[:8]}"
-    # memory-sink queries cannot recover from an existing checkpoint, so
-    # the default dir is unique per start (named queries would otherwise
-    # trip over the previous run's offsets)
-    ckpt = checkpoint or os.path.join(
-        _scratch_dir(), f"rs_ckpt_{qname}_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
-    )
-    return (
-        df.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(processingTime=trigger_interval)
-        .start()
-    )
+    writer = df.writeStream.format("memory").queryName(qname).outputMode(output_mode)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.trigger(processingTime=trigger_interval).start()
 
 
 @dataclass(frozen=True)
@@ -528,7 +465,7 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         {**_expand_links("events_a", src_path), **_expand_links("events_b", src_path)},
     )
     src = _read_events_stream(
-        spark, src_path, d, _env_max_files_per_trigger()
+        spark, src_path, d, _FORCED_MAX_FILES
     ).withWatermark("ts", "2 hours")
     deduped = src.dropDuplicatesWithinWatermark(["event_id"])
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("cnt"))
@@ -684,7 +621,7 @@ def _maintain_table(
         replace_contents(merged, target_path)
         n_applied += 1
 
-    src = _read_events_stream(spark, src_path, d, _env_max_files_per_trigger() or 1)
+    src = _read_events_stream(spark, src_path, d, _FORCED_MAX_FILES or 1)
     try:
         (
             src.writeStream.foreachBatch(apply_batch)

@@ -99,7 +99,7 @@ def test_repl_commands_give_usage_not_index_error(spark):
 
     for cmd in ("ls", "merge", "sql", "use"):
         buf = io.StringIO()
-        assert _dispatch(spark, cmd, out=buf) is True
+        assert _dispatch(spark, cmd, out=buf) == "error"
         assert "usage:" in buf.getvalue()
         assert "index out of range" not in buf.getvalue()
 

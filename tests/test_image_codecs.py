@@ -1,5 +1,5 @@
-"""Real image codecs (pure numpy): PPM/PGM/BMP decode, nearest-neighbor
-resize, PPM re-encode — and the Spark mapInPandas stages over them.
+"""Real image codecs (pure numpy): PPM/PGM/BMP decode, PPM re-encode —
+and the Spark mapInPandas stages over them.
 
 These are REAL pixels, not the fake-feature path: arrays round-trip
 bit-exactly, BMP row padding / bottom-up order / BGR swap are pinned,
@@ -17,8 +17,6 @@ from real_time_stream_processing_engine_spark.operators.multimodal import (
     encode_ppm,
     extract_image_features,
     real_decode,
-    resize_image,
-    resize_images_real,
 )
 
 
@@ -95,15 +93,6 @@ def test_real_decode_dispatches_and_rejects():
         real_decode(b"\x89PNG\r\n\x1a\n....")
 
 
-def test_resize_nearest_shape_and_identity():
-    img = _rand_img(8, 8, 3, seed=5)
-    assert np.array_equal(resize_image(img, 8, 8), img)  # identity
-    small = resize_image(img, 4, 2)
-    assert small.shape == (2, 4, 3)
-    # nearest-neighbor: every output pixel is some input pixel
-    assert small[0, 0].tolist() == img[0, 0].tolist()
-
-
 def test_spark_image_features_and_quarantine(spark):
     imgs = {
         1: _rand_img(4, 6, 3, seed=11),
@@ -117,18 +106,6 @@ def test_spark_image_features_and_quarantine(spark):
     assert got[1]["mean_luma"] == round(float(imgs[1].mean()), 6)
     assert (got[2]["width"], got[2]["height"], got[2]["channels"]) == (2, 2, 1)
     assert got[3]["width"] is None and "NotImplementedError" in got[3]["decode_error"]
-
-
-def test_spark_real_resize_roundtrip(spark):
-    img = _rand_img(16, 16, 3, seed=21)
-    df = spark.createDataFrame(
-        [(1, encode_ppm(img)), (2, b"junk")], "doc_id: long, payload: binary"
-    )
-    got = {r["doc_id"]: r for r in resize_images_real(df, out_w=4, out_h=4).collect()}
-    thumb = decode_ppm(bytes(got[1]["thumb"]))
-    assert thumb.shape == (4, 4, 3)
-    assert np.array_equal(thumb, resize_image(img, 4, 4))
-    assert got[2]["thumb"] is None  # quarantined, not failed
 
 
 # ---------------------------------------------------------------- WAV audio

@@ -1,51 +1,10 @@
-"""Multimodal decode plumbing: frame sampling (row expansion) and
-resize (binary->binary), both Arrow-batched mapInPandas with stubbed
-codecs — the schema/batch/partitioning contract is what's under test.
+"""Multimodal decode plumbing: video container walking and frame
+sampling (row expansion) and WAV decoding, Arrow-batched mapInPandas
+over real pure-numpy codecs — the schema/batch/partitioning contract
+is what's under test.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from real_time_stream_processing_engine_spark.operators.multimodal import (
-    THUMB_SIZE,
-    resize_images,
-    sample_frames,
-)
-from real_time_stream_processing_engine_spark.sources.readers import load_table
-
-
-def test_frame_sampling_expands_rows(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    n_docs = docs.count()
-    frames = sample_frames(docs, n_frames=4)
-    assert frames.count() == n_docs * 4
-    per_doc = frames.groupBy("doc_id").count().select("count").distinct().collect()
-    assert [r["count"] for r in per_doc] == [4]
-    idxs = {r["frame_idx"] for r in frames.select("frame_idx").distinct().collect()}
-    assert idxs == {0, 1, 2, 3}
-
-
-def test_frame_sampling_is_deterministic(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(20)
-    a = {tuple(r) for r in sample_frames(docs).collect()}
-    b = {tuple(r) for r in sample_frames(docs).collect()}
-    assert a == b
-
-
-def test_resize_fixed_size_binary(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    thumbs = resize_images(docs)
-    assert thumbs.schema["thumb"].dataType.typeName() == "binary"
-    lens = thumbs.select(F.length("thumb").alias("n")).distinct().collect()
-    assert [r["n"] for r in lens] == [THUMB_SIZE]
-    assert thumbs.count() == docs.count()
-
-
-def test_resize_repartitions_for_parallelism(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    out = resize_images(docs, min_parallelism=8)
-    assert out.rdd.getNumPartitions() >= 8
 
 
 def test_video_container_walker():

@@ -117,7 +117,6 @@ def test_salted_agg_equals_plain_agg_property(spark, rows, n_salt):
 
 from real_time_stream_processing_engine_spark.operators.sampling import (  # noqa: E402
     fraction_threshold_hex,
-    temperature_rates,
 )
 from real_time_stream_processing_engine_spark.operators.text import (  # noqa: E402
     _term_shard_py,
@@ -136,28 +135,6 @@ def test_threshold_hex_is_monotone_and_fixed_width(a, b):
     for t in (ta, tb):
         assert t == "g" or (len(t) == 28 and set(t) <= set("0123456789abcdef"))
     assert fraction_threshold_hex(0.0) == "0" * 28  # keeps nothing
-
-
-@given(
-    counts=st.dictionaries(
-        st.text(st.characters(categories=("Ll",)), min_size=1, max_size=4),
-        st.integers(min_value=1, max_value=10**9),
-        min_size=1,
-        max_size=8,
-    ),
-    alpha=st.floats(min_value=0.0, max_value=1.0, allow_nan=False),
-    budget=st.integers(min_value=1, max_value=10**9),
-)
-@settings(deadline=None, max_examples=200)
-def test_temperature_rates_invariants(counts, alpha, budget):
-    rates = temperature_rates(counts, alpha, budget)
-    assert set(rates) == set(counts)
-    assert all(0.0 < r <= 1.0 for r in rates.values())
-    expected = sum(rates[g] * n for g, n in counts.items())
-    # capping at 1 can only LOWER the expected take below budget
-    assert expected <= budget * (1 + 1e-9) or expected <= sum(counts.values())
-    if all(r < 1.0 for r in rates.values()):
-        assert abs(expected - budget) / budget < 1e-6  # uncapped: exact
 
 
 @given(

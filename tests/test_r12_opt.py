@@ -133,17 +133,14 @@ def test_fan_out_noop_when_already_parallel(spark):
     assert fan_out(df) is df
 
 
-def test_pandas_parallelism_half_cores_and_env(spark, monkeypatch):
+def test_pandas_parallelism_half_cores_and_env(spark):
     from real_time_stream_processing_engine_spark.functions.partitioning import (
         pandas_parallelism,
     )
 
     df = spark.range(10)
     want = max(1, spark.sparkContext.defaultParallelism // 2)
-    monkeypatch.delenv("SPARK_GRAFT_PANDAS_SHUFFLE", raising=False)
     assert pandas_parallelism(df) == want
-    monkeypatch.setenv("SPARK_GRAFT_PANDAS_SHUFFLE", "7")
-    assert pandas_parallelism(df) == 7
 
 
 def test_star_cc_converges_without_confirmation_round(spark):

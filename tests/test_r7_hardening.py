@@ -224,16 +224,6 @@ def test_stream_dir_hive_layout_refused(spark, sf_dir, tmp_path):
         stream_grouped_counts(spark, str(tmp_path / "sf")).collect()
 
 
-def test_stream_max_files_env_var_error_names_the_var(monkeypatch):
-    from real_time_stream_processing_engine_spark.streaming.runner import (
-        _env_max_files_per_trigger,
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_MAX_FILES", "all")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_MAX_FILES"):
-        _env_max_files_per_trigger()
-
-
 def test_binned_counts_refuses_foreign_checkpoint(spark, sf_dir, tmp_path):
     # reuse a maintained target under a FRESH checkpoint: batch ids are
     # checkpoint-local, so the old silent behavior (skip every new
@@ -667,36 +657,6 @@ def test_triangle_stats_empty_graph_zeros(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_blocked_jaccard_boundary_pair_survives_epsilon(spark):
-    # doc A: 7 distinct grams all contained in doc B's 100: exact
-    # Jaccard = 0.07 == threshold; the unguarded length filter
-    # (100 * 0.07 = 7.000000000000001 <= 7 -> false) used to drop it
-    from real_time_stream_processing_engine_spark.operators.dedup import (
-        ngram_jaccard_pairs_blocked,
-    )
-
-    words = [f"w{i}" for i in range(101)]  # 100 bigrams
-    a_text = " ".join(words[:8])           # 7 bigrams, a prefix of b
-    b_text = " ".join(words)
-    d = spark.createDataFrame(
-        [(1, "x", a_text), (2, "x", b_text)], "doc_id long, lang string, text string"
-    )
-    out = ngram_jaccard_pairs_blocked(d, threshold=0.07).collect()
-    assert [(r.doc_a, r.doc_b, r.jaccard) for r in out] == [(1, 2, 0.07)]
-
-
-def test_blocked_jaccard_null_block_excluded(spark):
-    from real_time_stream_processing_engine_spark.operators.dedup import (
-        ngram_jaccard_pairs_blocked,
-    )
-
-    d = spark.createDataFrame(
-        [(1, None, "a b c d"), (2, None, "a b c d")],
-        "doc_id long, lang string, text string",
-    )
-    assert ngram_jaccard_pairs_blocked(d, threshold=0.5).count() == 0
-
-
 def test_exact_rank_zero_norm_vector_excluded(spark):
     # a zero embedding must neither ANSI-fail the query nor occupy a
     # top-k slot with a NULL score
@@ -757,14 +717,12 @@ def test_truncated_clip_rolls_back_partial_frames(spark):
 def test_null_text_rows_excluded_from_fake_decodes(spark):
     from real_time_stream_processing_engine_spark.operators.multimodal import (
         extract_features,
-        sample_frames,
     )
 
     d = spark.createDataFrame(
         [(1, "hello"), (2, None)], "doc_id long, text string"
     )
     assert {r.doc_id for r in extract_features(d).collect()} == {1}
-    assert {r.doc_id for r in sample_frames(d, n_frames=2).collect()} == {1}
 
 
 def test_frame_sampler_and_salt_guards(spark):
@@ -773,15 +731,12 @@ def test_frame_sampler_and_salt_guards(spark):
     from real_time_stream_processing_engine_spark.operators.multimodal import (
         decode_wav,
         encode_wav,
-        make_frame_sampler,
     )
     from real_time_stream_processing_engine_spark.operators.skew import (
         salted_join,
     )
     import numpy as np
 
-    with _pytest.raises(ValueError, match="n_frames"):
-        make_frame_sampler(0)
     with _pytest.raises(ValueError, match="n_salt"):
         d = spark.createDataFrame([(1, 1)], "k long, v long")
         salted_join(d, d, "k", n_salt=0)

@@ -11,7 +11,6 @@ from real_time_stream_processing_engine_spark.operators.sampling import (
     mixture_sample,
     repeat_rows,
     stratified_fixed_k,
-    temperature_rates,
 )
 
 
@@ -87,24 +86,6 @@ def test_stratified_sample_is_deterministic(spark):
         for r in stratified_fixed_k(df.repartition(13), ["lang"], 25, "doc_id").collect()
     )
     assert a == b
-
-
-def test_temperature_rates_math():
-    # alpha=1: natural proportions -> one shared rate = budget/total.
-    assert temperature_rates({"a": 100, "b": 400}, 1.0, 250) == {"a": 0.5, "b": 0.5}
-    # alpha=0: equalized expected takes -> rate inversely proportional
-    # to group size (expected take identical across groups).
-    r = temperature_rates({"a": 100, "b": 400}, 0.0, 200)
-    assert abs(r["a"] * 100 - r["b"] * 400) < 1e-9
-    # rates cap at 1 (no silent upsampling past a group's size).
-    r = temperature_rates({"tiny": 10, "big": 10000}, 0.0, 5000)
-    assert r["tiny"] == 1.0
-    with pytest.raises(ValueError):
-        temperature_rates({}, 0.5, 10)
-    with pytest.raises(ValueError):
-        temperature_rates({"a": 0}, 0.5, 10)
-    with pytest.raises(ValueError):
-        temperature_rates({"a": 10}, 0.5, 0)
 
 
 def test_mixture_sample_rates_and_determinism(spark):

@@ -10,18 +10,18 @@ state equals the batch answer at stream end.
 
 from __future__ import annotations
 
+import glob
+import os
 import socket
 import threading
 import time
 
 from pyspark.sql import functions as F
 
-import pytest
-
 from real_time_stream_processing_engine_spark.streaming.runner import (
+    _scratch_dir,
     run_continuous,
     stream_grouped_counts,
-    stream_kafka,
     stream_rate,
     stream_socket,
     stream_stateful_running_count,
@@ -39,7 +39,13 @@ def _poll(predicate, timeout_s: float = 60.0, step_s: float = 0.25):
     return False
 
 
+def _live_ckpts() -> set[str]:
+    """Checkpoint dirs a live query could have left under scratch."""
+    return set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_live_*")))
+
+
 def test_rate_source_runs_continuously_and_output_is_monotone(spark):
+    before = _live_ckpts()
     src = stream_rate(spark, rows_per_second=50).select("timestamp", "value")
     q = run_continuous(src, name="live_rate", trigger_interval="250 milliseconds")
     try:
@@ -64,6 +70,7 @@ def test_rate_source_runs_continuously_and_output_is_monotone(spark):
     finally:
         q.stop()
     assert _poll(lambda: not q.isActive), "stop() did not terminate the query"
+    assert _live_ckpts() - before == set()
 
 
 def test_socket_source_receives_live_tuples(spark):
@@ -87,6 +94,7 @@ def test_socket_source_receives_live_tuples(spark):
             while not stop.is_set():  # keep the pipe open until stopped
                 time.sleep(0.05)
 
+    before = _live_ckpts()
     t = threading.Thread(target=serve, daemon=True)
     t.start()
     src = stream_socket(spark, "127.0.0.1", port).filter(
@@ -101,6 +109,7 @@ def test_socket_source_receives_live_tuples(spark):
         q.stop()
         stop.set()
         server.close()
+    assert _live_ckpts() - before == set()
 
 
 def test_backpressure_max_files_per_trigger(spark, tmp_path):
@@ -143,26 +152,6 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     assert throttled >= 3 > unthrottled
     # both drains saw all 3 copies
     assert spark.table("bp_throttled").count() == spark.table("bp_open").count()
-
-
-def test_kafka_source_gated_with_actionable_error(spark):
-    """Without the connector jar, stream_kafka must fail at CALL time
-    with instructions, not at query start with Spark's opaque
-    'Failed to find data source'.  (With the jar present the source
-    loads and this test is vacuous — detect which world we're in.)"""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-        has_kafka = True
-    except Exception:
-        has_kafka = False
-    if has_kafka:
-        df = stream_kafka(spark, "localhost:9092", "t")
-        assert "value" in df.columns
-    else:
-        with pytest.raises(RuntimeError, match="--packages"):
-            stream_kafka(spark, "localhost:9092", "t")
 
 
 def test_q32_stateful_stream_end_equals_batch(spark):

@@ -9,7 +9,7 @@ WHOLE streaming inventory, not just the query that bit:
 
 - the events table is re-staged as FOUR time-ordered part files
   (identical rows; ascending mtimes), other tables symlinked;
-- ``SPARK_GRAFT_STREAM_MAX_FILES=1`` forces every file-fed stream —
+- ``runner._FORCED_MAX_FILES = 1`` forces every file-fed stream —
   including the doubled-delivery and foreachBatch-sink paths — into
   one-file-per-micro-batch mode, so each query runs a real 4-batch
   (8 for doubled sources) sequence with the watermark advancing
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from real_time_stream_processing_engine_spark.queries import ORACLE, QUERIES
 from real_time_stream_processing_engine_spark.sources.readers import load_table
+from real_time_stream_processing_engine_spark.streaming import runner
 
 from .conftest import SF_SMOKE
 from .oracle import compare, duck_connection
@@ -132,9 +133,9 @@ def multi_sf_ooo(spark, tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def one_file_per_batch():
-    os.environ["SPARK_GRAFT_STREAM_MAX_FILES"] = "1"
-    yield
-    del os.environ["SPARK_GRAFT_STREAM_MAX_FILES"]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(runner, "_FORCED_MAX_FILES", 1)
+        yield
 
 
 @pytest.fixture(scope="module")
