@@ -11,11 +11,12 @@ exercises the pattern Spark needs for any fixpoint computation:
   the plan doubles per iteration and analysis time explodes;
 - a cheap distributed convergence check (count of changed labels).
 
-Min-label propagation converges in O(graph diameter) iterations; near-
-dup components are shallow (dozens of docs, diameter a few hops), so
-3-5 iterations is typical.  At extreme scale the alternating
-large-star/small-star formulation halves rounds; the loop shape below
-is the same.
+Min-label propagation with pointer jumping converges in O(log
+diameter) iterations: each round a node takes the minimum of its
+neighbors' labels AND its candidate label's own label, so label chains
+halve per round (a 64-node chain closes in <= 10 rounds).  Near-dup
+components are shallow (dozens of docs, diameter a few hops), so 3-7
+iterations is typical.
 
 High-availability posture (the r3-verdict flag): ``localCheckpoint``
 stores blocks on executors, so an executor loss mid-fixpoint kills the
@@ -30,16 +31,15 @@ cheap local runs:
   as a parquet table (atomic swap, ``catalog.replace_contents``) and a
   RESTARTED call with the same ``state_dir`` resumes from it — driver
   loss included.  This is sound because the per-round state is a valid
-  restart point at ANY round: propagation labels only move down toward
-  the component minimum, and star rounds preserve the graph's
-  connected components, so resuming from a saved round converges to
-  the exact same fixpoint.  A completed run deletes its state so a
+  restart point at ANY round: labels only move down toward the
+  component minimum, so resuming from a saved round converges to the
+  exact same fixpoint.  A completed run deletes its state so a
   later fresh call cannot resume a stale graph.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -56,11 +56,11 @@ def _round_persist(
     return df.localCheckpoint(eager=False)
 
 
-def _state_io(spark: SparkSession, state_dir: str | None, what: str):
-    """(load, save, clear) for resumable per-round state parquet."""
+def _state_io(spark: SparkSession, state_dir: str | None):
+    """(load, save, clear) for the resumable per-round labels parquet."""
     from ..sources.catalog import exists, replace_contents
 
-    path = None if state_dir is None else f"{state_dir.rstrip('/')}/{what}"
+    path = None if state_dir is None else f"{state_dir.rstrip('/')}/labels"
 
     def load() -> DataFrame | None:
         if path is None or not exists(spark, path):
@@ -98,9 +98,11 @@ def connected_components(
 
     Each iteration: every node adopts the min of its own label and its
     neighbors' labels (one join + one partial-aggregated groupBy), then
-    a count of changed labels decides convergence.  Raises if the graph
-    hasn't converged after ``max_iter`` rounds (diameter > max_iter
-    means something is wrong with the pair generator, not the loop).
+    jumps to its candidate label's own label, then a count of changed
+    labels decides convergence.  Rounds grow with log(diameter).
+    Raises if the graph hasn't converged after ``max_iter`` rounds (a
+    component that deep means something is wrong with the pair
+    generator, not the loop).
 
     HA levers (module docstring): ``checkpoint_dir`` makes every K-th
     lineage cut reliable; ``state_dir`` persists labels every
@@ -113,11 +115,16 @@ def connected_components(
     spark = edges.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    load, save, clear = _state_io(spark, state_dir, "labels")
-    sym = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).unionByName(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-    sym = sym.localCheckpoint()
+    load, save, clear = _state_io(spark, state_dir)
+    # both symmetric legs read ONE lazy cut of the projected edges, so
+    # the caller's edge pipeline runs once, not once per leg; sym is
+    # cut too, so each round's join scans one frame, not a union
+    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(
+        eager=False
+    )
+    sym = e.unionByName(
+        e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    ).localCheckpoint()
     labels = load()
     resumed = labels is not None
     if not resumed:
@@ -202,181 +209,6 @@ def connected_components(
     )
 
 
-def _sym(e: DataFrame) -> DataFrame:
-    return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """For each node u: link every LARGER neighbor to the minimum of
-    u's closed neighborhood.  Tall chains collapse toward the minimum
-    from above.
-
-    The neighborhood minimum is a WINDOW over u (one exchange) rather
-    than the groupBy + join-back form (aggregate exchange + join —
-    r12 opt: each star round ran ~13 AQE stage-jobs and the driver
-    gap between them was half of q83's wall; the window form measured
-    3.34 s -> 2.15 s for the whole fixpoint loop with set-identical
-    rounds).  No trailing distinct: duplicates cannot change
-    _small_star's per-u minima, and its OWN final distinct restores
-    set semantics at the round boundary, where the convergence check
-    reads them."""
-    s = _sym(e)
-    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
-    return (
-        s.withColumn("m", m)
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """For each node u: link u and all SMALLER neighbors to their
-    collective minimum.  Flat fans re-center on the minimum.  Same
-    window-instead-of-groupBy+join shape as :func:`_large_star`."""
-    lt = _sym(e).filter(F.col("v") < F.col("u")).withColumn(
-        "m", F.min("v").over(Window.partitionBy("u"))
-    )
-    linked = lt.select(F.col("v").alias("u"), F.col("m").alias("v"))
-    centers = lt.select("u", F.col("m").alias("v")).distinct()
-    return (
-        linked.unionByName(centers)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 30,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 3,
-    state_dir: str | None = None,
-    save_every: int = 2,
-    _fail_after_saves: int | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    same (node, cluster_id=component minimum) contract as
-    :func:`connected_components`, different convergence behavior:
-    O(log diameter) rounds instead of O(diameter), because each
-    large-star halves the height of tall chains while min-label
-    propagation walks them one hop per round.
-
-    For shallow near-dup clusters the simple propagation wins on
-    constant factors (fewer jobs per round); THIS is the extreme-scale
-    form for when components can be deep (link graphs, co-occurrence
-    graphs).  Both are exposed; `tests/test_graph.py` pins their
-    equality and the logarithmic round count on a pathological chain.
-
-    HA levers (module docstring): ``checkpoint_dir`` makes every K-th
-    lineage cut reliable; ``state_dir`` persists the contracted edge
-    set every ``save_every`` rounds and RESUMES from it on restart
-    (valid at any round: star rounds preserve the graph's connected
-    components, so the saved edge set has the same fixpoint)."""
-    if save_every < 1:
-        raise ValueError(f"save_every must be >= 1, got {save_every}")
-    spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    load, save, clear = _state_io(spark, state_dir, "edges")
-    # A node whose only edges are self-loops must still emit
-    # (node, node) exactly as the min-label variant does — the star
-    # rounds operate on proper edges only, so such nodes re-enter as
-    # singletons at the fixpoint (r5 review catch: the two CC variants
-    # disagreed on (5,5) input).  Only self-loop nodes can be lost
-    # (every proper edge carries both its endpoints into the rounds),
-    # so the repair needs just the self-loop node set anti-joined
-    # against the proper-edge node set — and BOTH derive from ONE
-    # materialization of the caller's (possibly expensive) edge
-    # pipeline: the distinct edge set is checkpointed BEFORE the
-    # self-loop filter, so the repair reads the checkpoint instead of
-    # re-executing upstream.  (The r5 form eagerly localCheckpointed
-    # the whole distinct node universe as a second upstream pass —
-    # measured 1.4x on q83 at sf0.1; r6 fix.)
-    saved = load()
-    resumed = saved is not None
-    if resumed:
-        e = saved.localCheckpoint()
-        # resume path only: the saved contraction holds proper edges,
-        # so the self-loop set must come from the caller's edges
-        selfloop_nodes = (
-            edges.filter(F.col(src) == F.col(dst))
-            .select(F.col(src).alias("node"))
-            .distinct()
-        )
-    else:
-        base = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        e = base.filter(F.col("u") != F.col("v"))
-        # distinct (u,u) pairs => node set is already distinct
-        selfloop_nodes = base.filter(F.col("u") == F.col("v")).select(
-            F.col("u").alias("node")
-        )
-    # Node set of the materialized proper-edge set: the anti-join base
-    # for the singleton repair (star rounds preserve component node
-    # sets, so round-0 membership == fixpoint membership).
-    touched = e.select(F.col("u").alias("node")).unionByName(
-        e.select(F.col("v").alias("node"))
-    )
-    n_saves = 0
-    for it in range(max_iter):
-        e = _round_persist(
-            _small_star(_large_star(e)), it, checkpoint_dir, checkpoint_every
-        )
-        # Convergence = the edge set IS a star set (every leaf points
-        # at exactly one center and no center is itself a leaf; all
-        # edges already satisfy v < u by _small_star's construction) —
-        # star sets are exactly the fixpoints of the alternating
-        # rounds (Kiveris et al. §3), checked on the round's OWN
-        # output.  This replaces the r7 consecutive-set fingerprint
-        # compare (r12 opt): it detects the fixpoint one full
-        # large+small round EARLIER (the fingerprint form needed an
-        # extra round to observe e_k == e_{k-1} — 5 rounds -> 4 on the
-        # sf0.1 LSH graph), and it is EXACT, retiring the documented
-        # ~2⁻⁶⁴ hash-collision caveat.  Cost per round is one
-        # union+groupBy job over the |E| frame, same order as the
-        # fingerprint aggregate, and the job doubles as the lazy
-        # lineage cut's materializing action exactly as before.
-        non_star = (
-            e.select(F.col("u").alias("n"), F.lit(1).alias("l"))
-            .unionByName(e.select(F.col("v").alias("n"), F.lit(0).alias("l")))
-            .groupBy("n")
-            .agg(F.sum("l").alias("nl"), F.min("l").alias("ml"))
-            # a node breaks the star property iff it leafs twice
-            # (nl > 1) or both leafs and centers (nl > 0 with a
-            # center row present, i.e. min l == 0)
-            .filter((F.col("nl") > 1) | ((F.col("nl") > 0) & (F.col("ml") == 0)))
-            .count()
-        )
-        if non_star == 0:
-            connected_components_star.rounds = it + 1
-            connected_components_star.resumed = resumed
-            clear()  # a completed run must not seed a later stale resume
-            # fixed point: edges are stars (leaf -> center); centers
-            # label themselves
-            leaves = e.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
-            centers = e.select(F.col("v").alias("node"), F.col("v").alias("cluster_id"))
-            assigned = leaves.unionByName(centers).distinct()
-            singletons = selfloop_nodes.join(
-                touched, "node", "left_anti"
-            ).select("node", F.col("node").alias("cluster_id"))
-            return assigned.unionByName(singletons)
-        if state_dir is not None and it % save_every == 0:
-            save(e.select("u", "v"))
-            n_saves += 1
-            if _fail_after_saves is not None and n_saves >= _fail_after_saves:
-                raise RuntimeError("injected driver crash (_fail_after_saves)")
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} iterations"
-    )
-
-
 def pagerank(
     edges: DataFrame,
     iters: int = 2,
@@ -405,7 +237,7 @@ def pagerank(
     # (twice), deg, and every iteration's contribution join — without
     # the cut an expensive upstream (q106's edge build) re-executes
     # ~2+4·iters times (r7 review; the r6 single-upstream-pass rule
-    # the star CC and triangle census already follow)
+    # connected_components and the triangle census already follow)
     edges = edges.localCheckpoint(eager=False)
     nodes = (
         edges.select(F.col(src_col).alias("node"))
@@ -543,8 +375,8 @@ def triangle_stats(
 
     The canonical edge set feeds FIVE consumers (degrees, orientation,
     both wedge legs, the closing probe); without a lineage cut each
-    one replays the caller's whole edge pipeline — the exact repeated-
-    upstream-pass regression r6 fixed in the star CC.  Both ``e`` and
+    one replays the caller's whole edge pipeline — the repeated-
+    upstream-pass regression r6 fixed in connected components.  Both ``e`` and
     ``o`` take the shared lazy cut (``_round_persist``): executor-
     local by default, reliable when ``checkpoint_dir`` is set (the
     long-job posture at real scale)."""

@@ -1549,8 +1549,11 @@ def q56_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     over q16's LSH candidate pairs (A~B, B~C collapse into one cluster
     even when A~C was never emitted) — the iterative-fixpoint pattern
     (driver loop, localCheckpoint lineage truncation, distributed
-    convergence check).  cluster_id = min reachable doc id, so the
-    result is deterministic and a recursive-CTE oracle reproduces it."""
+    convergence check).  Min-label propagation with pointer jumping
+    needs O(log diameter) rounds, and the pair pipeline runs once
+    (``operators/graph.py:connected_components``).  cluster_id = min
+    reachable doc id, so the result is deterministic and a
+    recursive-CTE oracle reproduces it."""
     from .operators.dedup import lsh_candidate_pairs
     from .operators.graph import connected_components
 
@@ -2767,29 +2770,6 @@ def q82_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q83_dedup_components_star", None)
-def q83_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q56's clusters via the alternating large-star/small-star
-    formulation (Kiveris et al.) — O(log diameter) rounds instead of
-    O(diameter), the form that survives DEEP components (link graphs,
-    co-occurrence graphs) where min-propagation walks one hop per
-    round.  Same contract, same recursive-CTE oracle as q56; the
-    logarithmic convergence is pinned separately on a 64-node chain in
-    `tests/test_graph.py`."""
-    from .operators.dedup import lsh_candidate_pairs
-    from .operators.graph import connected_components_star
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = lsh_candidate_pairs(docs, on_overflow="error")
-    return connected_components_star(pairs).select(
-        F.col("node").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
-    )
-
-
-ORACLE["q83_dedup_components_star"] = ORACLE["q56_dedup_components"]
-
-
 @register(
     "q84_quality_buckets",
     f"""
@@ -3903,7 +3883,7 @@ def q106_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (2 rounds, d=0.85) over the customer-supplier trade
     graph (distinct (customer, supplier) pairs through
     orders x lineitem, symmetrized) — the mass-propagation fixpoint
-    beside the components fixpoint (q56/q83): which suppliers sit at
+    beside the components fixpoint (q56): which suppliers sit at
     the center of the purchase network.
 
     Per round: ONE rank/out-degree join riding the edge list + ONE
@@ -7750,7 +7730,7 @@ def q165_cheapest_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (edge weight = cheapest observed line item between the customer's
     and supplier's nations) — one round of MIN-PLUS matrix algebra,
     the building block of distributed shortest paths (each further
-    round doubles the hop horizon; q56/q83's fixpoint machinery runs
+    round doubles the hop horizon; q56's fixpoint machinery runs
     the loop when diameters are unknown).
 
     The min-plus step IS a join + partial-aggregated min — facts
@@ -8847,7 +8827,7 @@ def q181_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO synchronous rounds of min-label propagation over the
     co-purchase graph, rolled up to community sizes — the bounded-round
     form of community detection (the FIXPOINT form with reliable
-    checkpoints and crash-resume is q56/q83's connected components;
+    checkpoints and crash-resume is q56's connected components;
     this exposes the per-round algebra itself, and the oracle UNROLLS
     both rounds in SQL the way q98's k-means and q106's PageRank
     oracles do).

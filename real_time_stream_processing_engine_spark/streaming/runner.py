@@ -78,6 +78,16 @@ def _stage_symlink_dir(tag: str, links: dict[str, str]) -> str:
     return d
 
 
+def _fresh_symlink_dir(tag: str, links: dict[str, str]) -> str:
+    """A new private staging dir for a drain whose checkpoint is fresh
+    too: nothing can resume from it, so the caller removes it when the
+    drain ends (a shared content-keyed dir would outlive every run)."""
+    d = tempfile.mkdtemp(prefix=f"rs_{tag}_u{os.getuid()}_", dir=_scratch_dir())
+    for name, target in links.items():
+        os.symlink(target, os.path.join(d, name))
+    return d
+
+
 def _as_stream_dir(path: str) -> str:
     """Spark's file stream source requires a directory; the testdata
     tables are single parquet files.  Stage a symlink dir (no copy).
@@ -460,16 +470,20 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen (a retry storm redelivers within seconds; the 2 h window is
     generous)."""
     src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir(
+    d = _fresh_symlink_dir(
         "dupdir",
         {**_expand_links("events_a", src_path), **_expand_links("events_b", src_path)},
     )
-    src = _read_events_stream(
-        spark, src_path, d, _FORCED_MAX_FILES
-    ).withWatermark("ts", "2 hours")
-    deduped = src.dropDuplicatesWithinWatermark(["event_id"])
-    agg = deduped.groupBy("event_type").agg(F.count("*").alias("cnt"))
-    return run_to_memory_available_now(agg).frame
+    try:
+        src = _read_events_stream(
+            spark, src_path, d, _FORCED_MAX_FILES
+        ).withWatermark("ts", "2 hours")
+        deduped = src.dropDuplicatesWithinWatermark(["event_id"])
+        agg = deduped.groupBy("event_type").agg(F.count("*").alias("cnt"))
+        # the memory sink holds the rows; the drain reads d no more
+        return run_to_memory_available_now(agg).frame
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -561,23 +575,22 @@ def _maintain_table(
     ``target_path``/``checkpoint`` default to fresh scratch dirs
     (``rs_<tag>_target_*``, ``rs_ckpt_rs_<tag>_*``); pass both
     explicitly to RESUME an interrupted run from its checkpoint.  A
-    default checkpoint is unresumable by construction, so it is
-    reclaimed when the drain ends, cleanly or not.  ``fail_after_batches``
+    default checkpoint is unresumable by construction, so it and its
+    source staging dir are reclaimed when the drain ends, cleanly or
+    not; an explicit one keeps the shared staging dir whose link paths
+    its file-source log records.  ``fail_after_batches``
     is the crash-injection hook: the sink raises after N applied
     batches, exactly like an executor/driver loss mid-stream, and the
     drain raises it to the caller."""
     from ..sources.catalog import recover_swap, replace_contents
 
     src_path = os.path.join(sf_dir, "events.parquet")
-    d = _stage_symlink_dir(
-        f"{tag}dir",
-        {k: v for c in copies for k, v in _expand_links(c, src_path).items()},
-    )
+    links = {k: v for c in copies for k, v in _expand_links(c, src_path).items()}
+    default_ckpt = checkpoint is None
     if target_path is None:
         target_path = os.path.join(
             _scratch_dir(), f"rs_{tag}_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
         )
-    default_ckpt = checkpoint is None
     ckpt = checkpoint or os.path.join(
         _scratch_dir(), f"rs_ckpt_rs_{tag}_{uuid.uuid4().hex[:8]}"
     )
@@ -621,8 +634,11 @@ def _maintain_table(
         replace_contents(merged, target_path)
         n_applied += 1
 
-    src = _read_events_stream(spark, src_path, d, _FORCED_MAX_FILES or 1)
+    d = (_fresh_symlink_dir if default_ckpt else _stage_symlink_dir)(
+        f"{tag}dir", links
+    )
     try:
+        src = _read_events_stream(spark, src_path, d, _FORCED_MAX_FILES or 1)
         (
             src.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", ckpt)
@@ -633,6 +649,7 @@ def _maintain_table(
     finally:
         if default_ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
+            shutil.rmtree(d, ignore_errors=True)
     return spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
 
 

@@ -8,7 +8,10 @@ window policy is freshness: --head lists the prefixes that must lead
 (rows whose code this round touches, then rows under bench
 adjudication); every remaining prefix follows ordered by the round of
 its LAST driver check — computed from the CORRECTNESS_r*.json union —
-oldest first, numeric order within a round.
+oldest first, numeric order within a round.  Only registered prefixes
+are ordered (an artifact may name a deleted query), and prefixes
+without an oracle go last, after the head too: the driver can only
+check their row count, so they would spend a window slot for little.
 
 --rounds pins the inclusive round range the order is computed from
 (default: every artifact present).  The committed order records its
@@ -35,6 +38,7 @@ import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def staleness_order(head: list[str], rounds=None) -> list[str]:
@@ -44,7 +48,13 @@ def staleness_order(head: list[str], rounds=None) -> list[str]:
     artifacts count; None means all present.  Artifacts are processed
     in NUMERIC round order (last write wins) — lexicographic glob
     order would misattribute once rounds reach three digits ('r100'
-    sorts before 'r99'; r10 advice item 4)."""
+    sorts before 'r99'; r10 advice item 4).  Prefixes that name no
+    registered query are skipped; oracle-less prefixes keep their
+    relative order but follow every oracle-backed one."""
+    from real_time_stream_processing_engine_spark.queries import ORACLE, QUERIES
+
+    registered = {name.split("_", 1)[0] for name in QUERIES}
+    checked = {name.split("_", 1)[0] for name in ORACLE}
     rounds = None if rounds is None else set(rounds)
     found: list[tuple[int, str]] = []
     for f in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
@@ -54,17 +64,20 @@ def staleness_order(head: list[str], rounds=None) -> list[str]:
     last: dict[str, int] = {}
     for rnd, f in sorted(found):
         for name in json.load(open(f)):
-            if name.startswith("_"):
-                continue
-            last[name.split("_", 1)[0]] = rnd
+            p = name.split("_", 1)[0]
+            if p in registered:
+                last[p] = rnd
     missing = [p for p in head if p not in last]
     if missing:
-        raise SystemExit(f"--head prefixes not in any CORRECTNESS artifact: {missing}")
+        raise SystemExit(
+            f"--head prefixes not registered or in no CORRECTNESS artifact: {missing}"
+        )
     rest = sorted(
         (p for p in last if p not in head),
         key=lambda p: (last[p], int(p[1:])),
     )
-    return head + rest
+    order = head + rest
+    return [p for p in order if p in checked] + [p for p in order if p not in checked]
 
 
 def format_body(order: list[str]) -> str:
@@ -140,7 +153,6 @@ def main() -> int:
     # fails): exec the regenerated source in a scratch namespace and
     # require it to still register every query, then write via a temp
     # file + atomic rename so a crash mid-write can't truncate it
-    sys.path.insert(0, ROOT)
     ns: dict = {"__file__": path, "__name__": "__spark_entry_candidate__"}
     exec(compile(out, path, "exec"), ns)
     q = ns["queries"]()

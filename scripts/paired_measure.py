@@ -3,7 +3,7 @@
 Usage: python scripts/paired_measure.py <repo_a> <repo_b> q69 q78 q95 [reps]
 
 Launches one fresh subprocess per (variant, rep), ALTERNATING variants
-so ambient box drift cancels out (the q83 protocol from round 6, which
+so ambient box drift cancels out (the round-6 protocol, which
 correctly separated a real code regression from window noise).  Each
 subprocess pays its own JVM+warmup untimed, then times each query once,
 exactly like bench.py.  Prints per-query medians per variant and the

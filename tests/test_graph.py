@@ -1,13 +1,21 @@
 """Connected-components semantics on literal graphs (q56 pins the
-LSH-pair pipeline against the recursive-CTE oracle)."""
+LSH-pair pipeline against the recursive-CTE oracle), plus the other
+graph operators."""
 
 from __future__ import annotations
 
+import os
+import random
+
+import pyarrow.parquet as pq
 import pytest
 
 from real_time_stream_processing_engine_spark.operators.graph import (
     connected_components,
 )
+from real_time_stream_processing_engine_spark.queries import ORACLE, QUERIES
+
+from .oracle import compare, duck_connection
 
 
 def _clusters(df):
@@ -49,55 +57,136 @@ def test_nonconvergence_raises(spark):
         connected_components(edges, max_iter=2)
 
 
-# ---------------------------------------------------------------------------
-# large-star/small-star formulation: same answer, logarithmic rounds
-# ---------------------------------------------------------------------------
-
-
-def test_star_equals_propagation_on_random_graphs(spark):
-    import random
-
-    from real_time_stream_processing_engine_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    for seed in (1, 2, 3):
-        rng = random.Random(seed)
-        edges = spark.createDataFrame(
-            [(rng.randrange(40), rng.randrange(40)) for _ in range(60)],
-            "doc_a long, doc_b long",
-        ).filter("doc_a <> doc_b")
-        a = {r.node: r.cluster_id for r in connected_components(edges).collect()}
-        b = {r.node: r.cluster_id for r in connected_components_star(edges).collect()}
-        assert a == b, f"seed {seed}"
-
-
-def test_star_converges_logarithmically_on_deep_chain(spark):
-    """A 64-node chain has diameter 63: min-propagation needs ~63
-    rounds; the star formulation must finish in O(log n)."""
-    from real_time_stream_processing_engine_spark.operators.graph import (
-        connected_components_star,
-    )
-
+def test_cc_pointer_jumping_is_sublinear_on_deep_chain(spark):
+    """A 64-edge chain converged in 64 rounds under plain min-label
+    propagation; pointer jumping must close it in O(log n) — the
+    r12 optimization this pin protects from regressing."""
     n = 64
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )
-    rows = {r.node: r.cluster_id for r in connected_components_star(edges, max_iter=14).collect()}
-    assert rows == {i: 0 for i in range(n)}
-    assert connected_components_star.rounds <= 12
+    rows = {
+        r.node: r.cluster_id
+        for r in connected_components(edges, max_iter=15).collect()
+    }
+    assert set(rows.values()) == {0}
+    assert len(rows) == n + 1
+    assert connected_components.rounds <= 10
 
 
-def test_star_two_node_and_preclustered(spark):
-    from real_time_stream_processing_engine_spark.operators.graph import (
-        connected_components_star,
-    )
+def test_cc_pointer_jumping_exact_on_branchy_graph(spark):
+    """Fixpoint labels must still be the component minimum on a graph
+    mixing chains, stars and singleton-joining bridges."""
+    edges = [
+        # component A: star at 10 + tail
+        (10, 11), (10, 12), (10, 13), (13, 14), (14, 15),
+        # component B: chain with a bridge joining two halves late
+        (20, 21), (21, 22), (23, 24), (24, 25), (22, 23),
+        # component C: single edge
+        (30, 31),
+    ]
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {
+        r.node: r.cluster_id for r in connected_components(df).collect()
+    }
+    want = {
+        **{v: 10 for v in (10, 11, 12, 13, 14, 15)},
+        **{v: 20 for v in (20, 21, 22, 23, 24, 25)},
+        **{v: 30 for v in (30, 31)},
+    }
+    assert got == want
 
-    edges = spark.createDataFrame(
-        [(5, 9), (1, 2), (2, 3), (1, 3)], "doc_a long, doc_b long"
+
+# ---------------------------------------------------------------------------
+# reference: a pure-Python union-find on the same edge lists
+# ---------------------------------------------------------------------------
+
+
+def _union_find(pairs):
+    """{node: min node of its component} for an undirected edge list."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _cc_rows(spark, pairs):
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    return {r.node: r.cluster_id for r in connected_components(edges).collect()}
+
+
+def test_cc_matches_union_find_on_random_graphs(spark):
+    for seed in (1, 2, 3):
+        rng = random.Random(seed)
+        pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(60)]
+        pairs = [(a, b) for a, b in pairs if a != b]
+        assert _cc_rows(spark, pairs) == _union_find(pairs), f"seed {seed}"
+
+
+_DEGENERATE = {
+    "empty": [],
+    "self_loops_only": [(5, 5), (7, 7), (5, 5)],
+    "duplicate_edges": [(1, 2), (1, 2), (2, 1), (3, 4), (3, 4)],
+    # the hub is the LARGEST id, so leaf 1's label must reach every
+    # other leaf through the hub
+    "hub_200_leaves": [(1000, i) for i in range(1, 201)],
+    "two_node_and_preclustered": [(5, 9), (1, 2), (2, 3), (1, 3)],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+def test_cc_matches_union_find_on_degenerate_inputs(spark, case):
+    pairs = _DEGENERATE[case]
+    assert _cc_rows(spark, pairs) == _union_find(pairs)
+
+
+def test_cc_single_upstream_pass(spark):
+    """r6 perf regression pin (1.4x on the LSH pairs at sf0.1): the
+    caller's edge pipeline must run ONCE — both symmetric legs and the
+    self-loop node come from one materialization, so upstream rows are
+    seen exactly once."""
+    raw = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 5), (7, 8)], "src long, dst long"
     )
-    rows = {r.node: r.cluster_id for r in connected_components_star(edges).collect()}
-    assert rows == {5: 5, 9: 5, 1: 1, 2: 1, 3: 1}
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting(pdfs):
+        for pdf in pdfs:
+            calls.add(len(pdf))
+            yield pdf
+
+    edges = raw.repartition(2).mapInPandas(counting, raw.schema)
+    out = {
+        (r.node, r.cluster_id)
+        for r in connected_components(edges, src="src", dst="dst").collect()
+    }
+    assert out == {(1, 1), (2, 1), (3, 1), (5, 5), (7, 7), (8, 7)}
+    assert calls.value == 4, f"upstream executed {calls.value / 4}x"
+
+
+def test_q56_empty_documents_matches_oracle(spark, sf_dir, tmp_path):
+    """No documents, no pairs, no clusters: q56 must return zero rows
+    like its recursive-CTE oracle over an empty table."""
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    pq.write_table(docs.slice(0, 0), str(tmp_path / "documents.parquet"))
+    df = QUERIES["q56_dedup_components"](spark, str(tmp_path))
+    con = duck_connection(str(tmp_path))
+    try:
+        result = compare(df, con, ORACLE["q56_dedup_components"])
+    finally:
+        con.close()
+    assert result["rows_spark"] == 0
+    assert result["ok"], result
 
 
 # ---------------------------------------------------------------------------
@@ -160,33 +249,6 @@ def test_propagation_kill_restart_resumes_and_matches(spark, tmp_path):
     assert connected_components.resumed is False
 
 
-def test_star_kill_restart_resumes_and_matches(spark, tmp_path):
-    from real_time_stream_processing_engine_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    state = str(tmp_path / "star_state")
-    edges = _chain(spark, 64)
-    clean = {
-        r.node: r.cluster_id
-        for r in connected_components_star(edges, max_iter=30).collect()
-    }
-    clean_rounds = connected_components_star.rounds
-    with pytest.raises(RuntimeError, match="injected driver crash"):
-        connected_components_star(
-            edges, max_iter=30, state_dir=state, save_every=1, _fail_after_saves=3
-        )
-    got = {
-        r.node: r.cluster_id
-        for r in connected_components_star(
-            edges, max_iter=30, state_dir=state, save_every=1
-        ).collect()
-    }
-    assert connected_components_star.resumed is True
-    assert connected_components_star.rounds < clean_rounds
-    assert got == clean
-
-
 def test_pagerank_uniform_on_cycle(spark):
     """On a directed cycle every node keeps exactly 1/N at every
     round — the closed-form fixed point."""
@@ -240,28 +302,19 @@ def test_pagerank_conserves_mass_on_closed_graph(spark, sf_dir):
     assert abs(total - 1.0) < 1e-9
 
 
-def test_cc_variants_agree_on_self_loops_and_kcore_checkpoints(spark, tmp_path):
+def test_cc_self_loop_node_and_kcore_checkpoint_dir(spark, tmp_path):
     """r5 review: (a) a node whose only edge is a self-loop must emit
-    (node, node) from BOTH CC variants (the star form dropped it);
-    (b) kcore(checkpoint_dir=...) must actually set the checkpoint dir
-    (it crashed in a fresh session)."""
-    from real_time_stream_processing_engine_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-        kcore,
-    )
+    (node, node); (b) kcore(checkpoint_dir=...) must actually set the
+    checkpoint dir (it crashed in a fresh session)."""
+    from real_time_stream_processing_engine_spark.operators.graph import kcore
 
     edges = spark.createDataFrame(
         [(5, 5), (1, 2), (2, 3)], "doc_a long, doc_b long"
     )
-    plain = {
+    got = {
         (r.node, r.cluster_id) for r in connected_components(edges).collect()
     }
-    star = {
-        (r.node, r.cluster_id)
-        for r in connected_components_star(edges).collect()
-    }
-    assert plain == star == {(5, 5), (1, 1), (2, 1), (3, 1)}
+    assert got == {(5, 5), (1, 1), (2, 1), (3, 1)}
     # kcore with a reliable checkpoint dir in this session
     e2 = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"

@@ -164,3 +164,22 @@ def test_gen_risk_order_rejects_unknown_head():
 
     with pytest.raises(SystemExit, match="q999"):
         g.staleness_order(["q999"])
+
+
+def test_gen_risk_order_orders_registered_prefixes_oracle_backed_first():
+    # the CORRECTNESS artifacts still name deleted queries (q83 is in
+    # r03, r09 and r13), and an oracle-less row gets only a rows-only
+    # check, so it must not spend a driver-window slot ahead of any
+    # oracle-backed row — not even from the head
+    import sys
+
+    from real_time_stream_processing_engine_spark.queries import ORACLE, QUERIES
+
+    sys.path.insert(0, "scripts")
+    import gen_risk_order as g
+
+    order = g.staleness_order(["q114", "q56"])
+    assert sorted(order) == sorted(n.split("_", 1)[0] for n in QUERIES)
+    checked = {n.split("_", 1)[0] for n in ORACLE}
+    assert set(order[: len(checked)]) == checked
+    assert order[0] == "q56"

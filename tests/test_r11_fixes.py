@@ -35,18 +35,20 @@ def test_staleness_order_rounds_filter_ignores_future_artifact(tmp_path):
     # recomputed order must not move
     import gen_risk_order as g
 
-    _write_artifact(tmp_path, "CORRECTNESS_r01.json", ["q1_a", "q2_b"])
+    # artifact rows must name registered prefixes: the order skips any
+    # other (a deleted query's row)
+    _write_artifact(tmp_path, "CORRECTNESS_r01.json", ["q01_a", "q02_b"])
     old_root = g.ROOT
     g.ROOT = str(tmp_path)
     try:
         pinned_before = g.staleness_order([], rounds=range(1, 2))
-        # the "next driver round" re-checks q1 only
-        _write_artifact(tmp_path, "CORRECTNESS_r02.json", ["q1_a"])
+        # the "next driver round" re-checks q01 only
+        _write_artifact(tmp_path, "CORRECTNESS_r02.json", ["q01_a"])
         pinned_after = g.staleness_order([], rounds=range(1, 2))
         unpinned = g.staleness_order([])
-        assert pinned_before == pinned_after == ["q1", "q2"]
-        # unpinned sees q1 as freshly checked in r2 and reorders
-        assert unpinned == ["q2", "q1"]
+        assert pinned_before == pinned_after == ["q01", "q02"]
+        # unpinned sees q01 as freshly checked in r2 and reorders
+        assert unpinned == ["q02", "q01"]
     finally:
         g.ROOT = old_root
 
@@ -58,15 +60,15 @@ def test_staleness_order_numeric_round_attribution(tmp_path):
     # must be last-write-wins in NUMERIC round order
     import gen_risk_order as g
 
-    _write_artifact(tmp_path, "CORRECTNESS_r99.json", ["q2_b"])
-    _write_artifact(tmp_path, "CORRECTNESS_r100.json", ["q1_a", "q2_b"])
+    _write_artifact(tmp_path, "CORRECTNESS_r99.json", ["q02_b"])
+    _write_artifact(tmp_path, "CORRECTNESS_r100.json", ["q01_a", "q02_b"])
     old_root = g.ROOT
     g.ROOT = str(tmp_path)
     try:
         # both rows were last checked in r100, so numeric order within
-        # the round decides; the lexicographic bug attributes q2 to r99
-        # and fronts it
-        assert g.staleness_order([]) == ["q1", "q2"]
+        # the round decides; the lexicographic bug attributes q02 to
+        # r99 and fronts it
+        assert g.staleness_order([]) == ["q01", "q02"]
     finally:
         g.ROOT = old_root
 

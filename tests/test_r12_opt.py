@@ -1,14 +1,10 @@
 """Pins for the round-12 optimization changes to operator internals.
 
-Two operators changed internals this round (results unchanged, pinned
-by the existing suites + oracle runs):
-
-- ``bpe_learn`` takes a lazy lineage cut per merge round, so round k
-  no longer replays the k-1 earlier folds and the plan stays depth-1.
-- ``connected_components`` adds pointer jumping (path compression):
-  each round a node also adopts its candidate label's own label, so
-  deep chains converge in O(log diameter) rounds instead of
-  O(diameter).
+``bpe_learn`` takes a lazy lineage cut per merge round, so round k
+no longer replays the k-1 earlier folds and the plan stays depth-1
+(results unchanged, pinned by the existing suites + oracle runs).
+``connected_components``' pointer-jumping pins live in
+``tests/test_graph.py`` with the operator's other tests.
 """
 
 from __future__ import annotations
@@ -17,49 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_stream_processing_engine_spark.operators.bpe import bpe_learn
-from real_time_stream_processing_engine_spark.operators.graph import (
-    connected_components,
-)
-
-
-def test_cc_pointer_jumping_is_sublinear_on_deep_chain(spark):
-    """A 64-edge chain converged in 64 rounds under plain min-label
-    propagation; pointer jumping must close it in O(log n) — the
-    r12 optimization this pin protects from regressing."""
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
-    )
-    rows = {
-        r.node: r.cluster_id
-        for r in connected_components(edges, max_iter=15).collect()
-    }
-    assert set(rows.values()) == {0}
-    assert len(rows) == n + 1
-    assert connected_components.rounds <= 10
-
-
-def test_cc_pointer_jumping_exact_on_branchy_graph(spark):
-    """Fixpoint labels must still be the component minimum on a graph
-    mixing chains, stars and singleton-joining bridges."""
-    edges = [
-        # component A: star at 10 + tail
-        (10, 11), (10, 12), (10, 13), (13, 14), (14, 15),
-        # component B: chain with a bridge joining two halves late
-        (20, 21), (21, 22), (23, 24), (24, 25), (22, 23),
-        # component C: single edge
-        (30, 31),
-    ]
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r.node: r.cluster_id for r in connected_components(df).collect()
-    }
-    want = {
-        **{v: 10 for v in (10, 11, 12, 13, 14, 15)},
-        **{v: 20 for v in (20, 21, 22, 23, 24, 25)},
-        **{v: 30 for v in (30, 31)},
-    }
-    assert got == want
 
 
 def test_bpe_learn_plan_depth_constant_across_rounds(spark):
@@ -141,37 +94,6 @@ def test_pandas_parallelism_half_cores_and_env(spark):
     df = spark.range(10)
     want = max(1, spark.sparkContext.defaultParallelism // 2)
     assert pandas_parallelism(df) == want
-
-
-def test_star_cc_converges_without_confirmation_round(spark):
-    """The star-set convergence check must detect the fixpoint on the
-    round that PRODUCES it (the r7 fingerprint compare needed one more
-    round to observe set equality), and the labels stay the component
-    minimum."""
-    from real_time_stream_processing_engine_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    # a star is the fixpoint after ONE round here
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4)], "doc_a long, doc_b long"
-    )
-    got = {
-        r.node: r.cluster_id
-        for r in connected_components_star(edges).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-    assert connected_components_star.rounds <= 2
-
-    # deep chain still collapses to the global minimum, logarithmically
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(32)], "doc_a long, doc_b long"
-    )
-    got = {
-        r.node: r.cluster_id
-        for r in connected_components_star(chain, max_iter=12).collect()
-    }
-    assert set(got.values()) == {0} and len(got) == 33
 
 
 def test_lit_double_array_bit_identical(spark):

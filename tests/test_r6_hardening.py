@@ -141,35 +141,6 @@ def test_oracle_compare_positional_on_duplicate_columns(spark, tmp_path):
     con.close()
 
 
-def test_cc_star_single_upstream_pass(spark):
-    """r6 perf regression pin (q83 1.4x at sf0.1): the r5 singleton
-    repair materialized the node universe as a SECOND pass over the
-    caller's edge pipeline.  Both the proper-edge set and the
-    self-loop repair set must now derive from ONE materialization —
-    upstream rows are seen exactly once."""
-    from real_time_stream_processing_engine_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    raw = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 5), (7, 8)], "src long, dst long"
-    )
-    calls = spark.sparkContext.accumulator(0)
-
-    def counting(pdfs):
-        for pdf in pdfs:
-            calls.add(len(pdf))
-            yield pdf
-
-    edges = raw.repartition(2).mapInPandas(counting, raw.schema)
-    out = {
-        (r.node, r.cluster_id)
-        for r in connected_components_star(edges, src="src", dst="dst").collect()
-    }
-    assert out == {(1, 1), (2, 1), (3, 1), (5, 5), (7, 7), (8, 7)}
-    assert calls.value == 4, f"upstream executed {calls.value / 4}x"
-
-
 def test_quantile_crossings_zero_p10_yields_null_ratio(spark):
     """ADVICE r5 (stats.py): value domains including 0 must produce a
     NULL ratio (explicit NULLIF), never an ANSI-mode error."""

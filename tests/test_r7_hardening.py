@@ -265,10 +265,13 @@ def test_binned_counts_same_checkpoint_resume_is_noop(spark, sf_dir, tmp_path):
     assert first == again
 
 
-def test_default_checkpoints_are_reclaimed(spark, sf_dir):
+def test_default_checkpoints_are_reclaimed(spark, sf_dir, tmp_path):
     # default (fresh-uuid) checkpoints are unresumable by construction;
     # a clean drain must not leak them on tmpfs (r7 review: bench loops
-    # over the foreachBatch sinks grew /dev/shm without bound)
+    # over the foreachBatch sinks grew /dev/shm without bound).  The
+    # source staging dirs of those drains go with them: the events
+    # table is linked in from a fresh path, so a content-keyed staging
+    # dir left behind would be a new entry
     import glob
     import os
 
@@ -276,19 +279,31 @@ def test_default_checkpoints_are_reclaimed(spark, sf_dir):
         _scratch_dir,
         stream_binned_counts,
         stream_bitmap_dau,
+        stream_dedup_counts,
     )
 
-    before = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_dau_*")))
-    stream_bitmap_dau(spark, sf_dir).collect()
-    after = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_dau_*")))
-    assert after <= before
+    os.symlink(
+        os.path.join(sf_dir, "events.parquet"), tmp_path / "events.parquet"
+    )
+    src = str(tmp_path)
+
+    def entries(*tags):
+        return {
+            p
+            for t in tags
+            for p in glob.glob(os.path.join(_scratch_dir(), f"rs_{t}_*"))
+        }
+
+    before = entries("ckpt_rs_dau", "daudir", "dupdir")
+    stream_bitmap_dau(spark, src).collect()
+    stream_dedup_counts(spark, src).collect()
+    assert entries("ckpt_rs_dau", "daudir", "dupdir") <= before
     # a crashed drain cannot be resumed from a checkpoint the caller
-    # never saw, so that one is reclaimed too
-    before = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_psi_*")))
+    # never saw, so that one and its staging dir are reclaimed too
+    before = entries("ckpt_rs_psi", "psidir")
     with pytest.raises(Exception, match="injected sink crash"):
-        stream_binned_counts(spark, sf_dir, fail_after_batches=0)
-    after = set(glob.glob(os.path.join(_scratch_dir(), "rs_ckpt_rs_psi_*")))
-    assert after <= before
+        stream_binned_counts(spark, src, fail_after_batches=0)
+    assert entries("ckpt_rs_psi", "psidir") <= before
 
 
 # ---------------------------------------------------------------------------
