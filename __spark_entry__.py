@@ -22,9 +22,10 @@ from real_time_stream_processing_engine_spark.queries import ORACLE, QUERIES
 # ledger closed at 356/356 (round 9), the policy is freshness: rows
 # whose code this round touches lead, then rows under bench
 # adjudication, then everything else oldest-driver-check-first; the
-# oracle-less rows (rows-only checks) come last, head ones included.  Every
-# row is additionally covered every session by tests/ and the committed
-# scripts/local_correctness.py artifacts at two SFs.
+# oracle-less rows (contract queries, which the driver checks on rows
+# only) come last, head ones included.  Every row is additionally
+# checked by oracle or contract in tests/ and in the committed
+# scripts/correctness.py artifacts at two SFs.
 #
 # Provenance of the committed order, kept in sync by
 # scripts/gen_risk_order.py --write and read by the regeneration pin
@@ -46,8 +47,9 @@ _RISK_ORDER = [
     # pandas-parallelism, streaming state-store/q88, lit_double_array
     # sites) — 37 prefixes, so the driver's ~50-query r13 window
     # covers every r13- AND r12-touched query.  The tail is pure
-    # freshness from the CORRECTNESS_r01-r12 union, then the six
-    # oracle-less prefixes (q114 among them, though in the head).
+    # freshness from the CORRECTNESS_r01-r12 union, then the five
+    # oracle-less prefixes (q114 among them, though in the head); q32
+    # gained an oracle, so it takes its freshness place.
     "q230", "q16", "q17", "q18", "q39", "q47", "q236", "q262",
     "q266", "q307", "q68", "q74", "q95", "q131", "q335", "q15",
     "q22", "q27", "q38", "q56", "q88", "q98", "q100", "q110",
@@ -78,21 +80,21 @@ _RISK_ORDER = [
     "q184", "q185", "q187", "q189", "q191", "q342", "q01", "q02",
     "q03", "q04", "q05", "q06", "q07", "q08", "q09", "q11",
     "q12", "q14", "q19", "q20", "q21", "q23", "q24", "q25",
-    "q26", "q28", "q29", "q31", "q33", "q34", "q35", "q36",
-    "q41", "q43", "q46", "q48", "q67", "q69", "q148", "q308",
-    "q51", "q52", "q53", "q54", "q59", "q60", "q66", "q70",
-    "q71", "q72", "q76", "q77", "q78", "q79", "q80", "q81",
-    "q84", "q87", "q89", "q193", "q194", "q195", "q196", "q197",
-    "q198", "q199", "q200", "q201", "q202", "q203", "q204", "q205",
-    "q206", "q207", "q208", "q209", "q210", "q211", "q212", "q213",
-    "q214", "q215", "q216", "q217", "q218", "q219", "q220", "q221",
-    "q222", "q223", "q224", "q225", "q226", "q227", "q228", "q229",
-    "q231", "q233", "q234", "q235", "q237", "q238", "q239", "q240",
-    "q241", "q242", "q243", "q245", "q246", "q247", "q248", "q249",
-    "q250", "q251", "q252", "q253", "q254", "q255", "q256", "q257",
-    "q258", "q259", "q260", "q261", "q263", "q264", "q265", "q267",
-    "q268", "q269", "q270", "q271", "q272", "q114", "q101", "q105",
-    "q32", "q44", "q45",
+    "q26", "q28", "q29", "q31", "q32", "q33", "q34", "q35",
+    "q36", "q41", "q43", "q46", "q48", "q67", "q69", "q148",
+    "q308", "q51", "q52", "q53", "q54", "q59", "q60", "q66",
+    "q70", "q71", "q72", "q76", "q77", "q78", "q79", "q80",
+    "q81", "q84", "q87", "q89", "q193", "q194", "q195", "q196",
+    "q197", "q198", "q199", "q200", "q201", "q202", "q203", "q204",
+    "q205", "q206", "q207", "q208", "q209", "q210", "q211", "q212",
+    "q213", "q214", "q215", "q216", "q217", "q218", "q219", "q220",
+    "q221", "q222", "q223", "q224", "q225", "q226", "q227", "q228",
+    "q229", "q231", "q233", "q234", "q235", "q237", "q238", "q239",
+    "q240", "q241", "q242", "q243", "q245", "q246", "q247", "q248",
+    "q249", "q250", "q251", "q252", "q253", "q254", "q255", "q256",
+    "q257", "q258", "q259", "q260", "q261", "q263", "q264", "q265",
+    "q267", "q268", "q269", "q270", "q271", "q272", "q114", "q101",
+    "q105", "q44", "q45",
 ]
 
 
@@ -114,6 +116,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for every SQL-expressible query; queries
-    absent here get the driver's weaker rows-only check."""
+    """DuckDB-equivalent SQL for every SQL-expressible query.  The
+    driver checks a query absent here on rows only; locally each such
+    query is held to a contract against DuckDB's exact answer
+    (``tests/oracle.CONTRACTS``, run by ``tests/`` and
+    ``scripts/correctness.py``)."""
     return _ordered(ORACLE)

@@ -16,11 +16,12 @@ frequencies are aggregated once up front, the classic optimization):
   same pass), no Python, no shuffle.
 
 Determinism: pair ties break by (count DESC, left, right).  The merge
-TABLE is rows-only at the driver contract (the apply step's
-sequential fold has no DuckDB equivalent — ``list_reduce`` cannot
-carry a list accumulator); the classic worked example and the
-reconstruction/length invariants are pinned in
-``tests/test_bpe.py`` instead.
+TABLE has no oracle SQL (the apply step's sequential fold has no
+DuckDB equivalent — ``list_reduce`` cannot carry a list accumulator),
+so q114 is held to a contract instead: its merges equal a plain-Python
+reference BPE over DuckDB's exact word counts (``tests/oracle.py``).
+The classic worked example and the reconstruction/length invariants
+are pinned in ``tests/test_bpe.py``.
 """
 
 from __future__ import annotations

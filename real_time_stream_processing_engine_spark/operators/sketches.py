@@ -14,8 +14,9 @@ expressions (``xxhash64`` seeded per row) — the sketch IS a DataFrame
 of at most depth x width rows, mergeable by (row, bucket) sum, so
 per-partition sketches combine exactly like any other commutative
 aggregate at 100 TB.  No oracle SQL exists for the point estimates
-(DuckDB has no xxhash64), so the query is rows-only by design with the
-error bounds pinned by test instead — same contract as q44/q45.
+(DuckDB has no xxhash64), so q101/q105 have no oracle SQL; their
+contract (``tests/oracle.CONTRACTS``) checks each estimate against the
+exact count: never under, never over by more than e/WIDTH·N.
 """
 
 from __future__ import annotations

@@ -6,7 +6,9 @@ Each query is registered as ``(name, spark_fn, oracle_sql)``:
 - ``oracle_sql`` — ANSI SQL DuckDB runs over the same parquet tables
   (pre-registered views: region nation customer supplier part orders
   lineitem events documents embeddings).  ``None`` marks queries whose
-  semantics are not SQL-expressible (driver then does a rows-only check).
+  output no SQL reproduces exactly (sketch estimates, the BPE fold): the
+  driver then checks rows only, and ``tests/oracle.CONTRACTS`` holds
+  each to a stated bound against DuckDB's exact answer.
 
 Determinism rules: every float that reaches the output is ROUND()ed
 identically on both sides; every aggregate/computed column is aliased to
@@ -819,12 +821,15 @@ def q31_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_session_windows(spark, sf_dir)
 
 
-@register("q32_stream_stateful_count", None)
+@register(
+    "q32_stream_stateful_count",
+    "SELECT event_type, CAST(COUNT(*) AS BIGINT) AS cnt FROM events GROUP BY event_type",
+)
 def q32_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (``applyInPandasWithState``)
-    reproducing O9's running count with durable, per-key state.  Not
-    SQL-expressible (stateful update-mode semantics) — rows-only check
-    here; tests assert stream-end equality with the batch count."""
+    reproducing O9's running count with durable, per-key state.  The
+    update-mode state itself is not SQL-expressible, but its stream-end
+    value is the batch count per key, which is the oracle."""
     from .streaming.runner import stream_stateful_running_count
 
     return stream_stateful_running_count(spark, sf_dir)
@@ -1176,8 +1181,8 @@ def q43_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Approximate (sketch) variants — the documented 100 TB swaps for q35 and
 # q41, exposed as first-class queries.  Registered WITHOUT oracle SQL by
 # design: a t-digest / HLL estimate cannot hash-match an exact oracle, so
-# the driver applies its rows-only contract; closeness to the exact
-# answer is pinned by tests/test_approx_variants.py instead.
+# the driver checks rows only; locally each is held to its published
+# error bound against DuckDB's exact answer (tests/oracle.CONTRACTS).
 # --------------------------------------------------------------------------
 
 
@@ -1187,7 +1192,8 @@ def q44_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     One pass, mergeable partials, bounded memory per group — the exact
     ``percentile`` holds every value per group in memory, which at
     100 TB is the difference between a sketch merge and an OOM.
-    accuracy=10000 → rank error ≤ 1/10000."""
+    accuracy=10000 → rank error ≤ n/10000, the contract it is checked
+    against (tests/oracle.CONTRACTS)."""
     li = load_table(spark, sf_dir, "lineitem")
     pcts = {"p25": 0.25, "p50": 0.50, "p75": 0.75, "p95": 0.95}
     return li.groupBy("l_returnflag").agg(
@@ -1207,7 +1213,9 @@ def q45_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose state is the distinct keyspace; the HLL sketch replaces that
     with a few KB per group and one ordinary partial-aggregated
     exchange — same cube lattice, bounded memory.  rsd=0.01 → ~1%
-    relative error."""
+    relative error; its contract (tests/oracle.CONTRACTS) holds the
+    lattice, ``n_events`` and ``sum_value`` exact and ``n_users``
+    within 3·rsd of q41's exact count."""
     ev = load_table(spark, sf_dir, "events")
     dow = (F.dayofweek("ts") - 1).cast("long")
     return (
@@ -3646,11 +3654,11 @@ def q101_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimated from a 4 x 1024 counter grid instead of a vocab-sized
     exact count, probed for the top-20 tokens by estimate.
 
-    Rows-only by design (DuckDB has no xxhash64, so the estimates are
-    not SQL-replicable); the published never-undercount / eps-delta
-    overcount bounds and exact mergeability are pinned in
-    ``tests/test_approx_variants.py`` instead — the same contract as
-    q44/q45.  At 100 TB the sketch build is one scan + one exchange of
+    No oracle SQL (DuckDB has no xxhash64, so the estimates are not
+    SQL-replicable); its contract (tests/oracle.CONTRACTS) checks each
+    row against the exact token count: never an undercount, an
+    overcount of at most e/WIDTH·N.  Exact mergeability is pinned in
+    ``tests/test_approx_variants.py``.  At 100 TB the sketch build is one scan + one exchange of
     <= depth x width partials, and day-level sketches merge by bucket
     sum without rescanning (``operators/sketches.py``)."""
     from .operators.sketches import countmin_build, countmin_estimate
@@ -3829,9 +3837,10 @@ def q105_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     a batch-id ledger that rides in the sketch rows so a replayed
     batch is a whole-batch no-op.  Stream end equals the batch sketch
     EXACTLY (merge associativity — pinned in
-    ``tests/test_streaming_live.py``); rows-only here like q101 (no
-    xxhash64 in DuckDB).  Output: top-10 users by estimated event
-    count."""
+    ``tests/test_streaming_live.py``); no oracle SQL (no xxhash64
+    in DuckDB), so it is held to q101's count-min contract
+    (tests/oracle.CONTRACTS) against the exact per-user event counts.
+    Output: top-10 users by estimated event count."""
     from .operators.sketches import countmin_estimate
     from .streaming.runner import stream_countmin
 
@@ -4396,11 +4405,14 @@ def q114_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the winning merge as a codegen fold.  Output: the first 8 learned
     merges in order with their pair counts.
 
-    Rows-only at the driver contract (the greedy merge fold has no
-    DuckDB equivalent — list_reduce cannot carry a list accumulator);
-    the classic worked example (lowest/newest/widest -> 'es', 'est',
-    ...), run-handling ('aaa' under (a,a)), reconstruction, and
-    length-accounting invariants are pinned in ``tests/test_bpe.py``."""
+    No oracle SQL (the greedy merge fold has no DuckDB equivalent —
+    list_reduce cannot carry a list accumulator), so the driver checks
+    rows only; its contract (tests/oracle.CONTRACTS) requires the 8
+    merges to equal a plain-Python reference BPE over DuckDB's exact
+    word counts.  The classic worked example (lowest/newest/widest ->
+    'es', 'est', ...), run-handling ('aaa' under (a,a)),
+    reconstruction, and length-accounting invariants are pinned in
+    ``tests/test_bpe.py``."""
     from .operators.bpe import bpe_learn
 
     docs = load_table(spark, sf_dir, "documents")

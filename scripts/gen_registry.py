@@ -2,10 +2,11 @@
 
 One row per ``queries()`` entry, derived FROM the registry itself (not
 hand-maintained prose, which drifts): the implementing function's
-file:line, whether a DuckDB oracle backs it (hash-checked) or it is a
-documented rows-only contract, which operator/streaming modules the
-implementation pulls in, which test files mention it, and its status
-in the committed CORRECTNESS_LOCAL.json artifact.
+file:line, whether a DuckDB oracle backs it (hash-checked) or a stated
+contract checked against DuckDB's exact answer (``tests/oracle.CONTRACTS``),
+which operator/streaming modules the implementation pulls in, which
+test files mention it, and its status in the committed
+CORRECTNESS_LOCAL.json artifact (written by ``scripts/correctness.py``).
 
 The script asserts its own counts against the registry before writing,
 so a stale or padded table cannot be committed by accident:
@@ -68,6 +69,7 @@ def _test_index() -> dict[str, set[str]]:
 
 def main() -> int:
     import __spark_entry__ as mod
+    from tests.oracle import CONTRACTS
 
     qs, osql = mod.queries(), mod.oracle_sql()
     with open(os.path.join(REPO, "CORRECTNESS_LOCAL.json")) as f:
@@ -75,37 +77,28 @@ def main() -> int:
     tidx = _test_index()
 
     rows = []
-    n_oracle = n_rows_only = n_green = 0
+    n_oracle = n_contract = n_green = 0
     for name, fn in sorted(qs.items()):
         prefix = name.split("_", 1)[0]
-        has_oracle = name in osql
-        n_oracle += has_oracle
-        n_rows_only += not has_oracle
+        kind = "oracle" if name in osql else "contract"
+        n_oracle += kind == "oracle"
+        n_contract += kind == "contract"
         rec = local.get(name, {})
-        if has_oracle:
-            green = bool(rec.get("hash_match"))
-            status = "hash-green" if green else "RED"
-        else:
-            # the local artifact records rows-only contracts as
-            # err='no_oracle' with the Spark row count — green means
-            # "ran, produced rows, no comparison error"
-            green = (
-                rec.get("err") in (None, "no_oracle")
-                and (rec.get("spark_rows") or 0) > 0
-            )
-            status = "rows-green" if green else "RED"
+        # green: the check passed and both partitionings agreed
+        green = rec.get("check") == kind and bool(rec.get("ok")) and bool(rec.get("deterministic"))
+        status = ("hash-green" if kind == "oracle" else "contract-green") if green else "RED"
         n_green += green
         tests = ", ".join(sorted(tidx.get(prefix, ()))[:3]) or "—"
         mods = ", ".join(_modules_used(fn)) or "inline DF plan"
         rows.append(
-            f"| {name} | `{_impl_site(fn)}` | "
-            f"{'oracle' if has_oracle else 'rows-only'} | {status} | "
+            f"| {name} | `{_impl_site(fn)}` | {kind} | {status} | "
             f"{mods} | {tests} |"
         )
 
     assert len(rows) == len(qs), (len(rows), len(qs))
     assert n_oracle == len(osql)
-    assert n_oracle + n_rows_only == len(qs)
+    assert n_contract == len(CONTRACTS)
+    assert n_oracle + n_contract == len(qs)
 
     out = [
         "# REGISTRY — generated claims table",
@@ -116,7 +109,8 @@ def main() -> int:
         "",
         f"- **queries:** {len(qs)}",
         f"- **oracle-backed (hash-checked vs DuckDB):** {n_oracle}",
-        f"- **rows-only contracts (documented non-SQL-expressible):** {n_rows_only}",
+        f"- **contracts (bounds checked against DuckDB's exact answer):** {n_contract}",
+        "- **rows-only:** 0",
         f"- **green in CORRECTNESS_LOCAL.json:** {n_green} / {len(qs)}",
         "",
         "| query | impl | check | local status | modules | tests (≤3) |",
@@ -128,7 +122,7 @@ def main() -> int:
         f.write("\n".join(out))
     print(
         f"REGISTRY.md: {len(rows)} rows, {n_oracle} oracle, "
-        f"{n_rows_only} rows-only, {n_green} green"
+        f"{n_contract} contract, {n_green} green"
     )
     return 0 if n_green == len(qs) else 1
 

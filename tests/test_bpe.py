@@ -1,6 +1,7 @@
 """BPE merge learning: the classic worked example, run semantics, and
-structural invariants (q114 is rows-only at the driver contract, so
-these tests ARE its correctness gate)."""
+structural invariants.  q114's own merges are checked against a
+plain-Python reference BPE by its contract in ``tests/oracle.py``;
+these tests pin what that comparison cannot show."""
 
 from __future__ import annotations
 

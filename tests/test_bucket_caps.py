@@ -119,7 +119,7 @@ def test_blocked_neardup_cap(spark):
 def test_error_mode_passes_when_no_overflow(degenerate_docs):
     small = degenerate_docs.filter(F.col("doc_id") >= N_DUP)
     pairs = lsh_candidate_pairs(small, max_bucket=100, on_overflow="error")
-    assert pairs.count() >= 0  # no oversized bucket -> no raise
+    pairs.collect()  # no oversized bucket -> no raise
 
 
 def test_bad_on_overflow_rejected(degenerate_docs):

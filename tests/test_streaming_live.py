@@ -4,8 +4,9 @@ The reference is a *real-time* engine: tuples flow continuously from
 stage to stage over TCP (``Node.java:915-981``) under a job lifecycle of
 start -> stream -> observe -> stop (``RainStorm.java:842-877``).  These
 tests pin the repo's continuous entry points (rate + socket sources,
-``run_continuous``) and the q32 claim that custom stateful streaming
-state equals the batch answer at stream end.
+``run_continuous``) and streaming-state equality with the batch answer.
+q32's stream-end running count is checked against its DuckDB oracle
+with every other registered query (``tests/test_oracle_queries.py``).
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ from real_time_stream_processing_engine_spark.streaming.runner import (
     stream_grouped_counts,
     stream_rate,
     stream_socket,
-    stream_stateful_running_count,
 )
 
 from .conftest import SF_SMOKE
@@ -152,23 +152,6 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     assert throttled >= 3 > unthrottled
     # both drains saw all 3 copies
     assert spark.table("bp_throttled").count() == spark.table("bp_open").count()
-
-
-def test_q32_stateful_stream_end_equals_batch(spark):
-    """Pins COVERAGE.md's claim: the applyInPandasWithState running
-    count per key equals the batch groupBy().count() at stream end."""
-    got = {
-        r.event_type: r.cnt
-        for r in stream_stateful_running_count(spark, SF_SMOKE).collect()
-    }
-    batch = {
-        r.event_type: r.cnt
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    assert got == batch
 
 
 def test_observed_metrics_account_for_every_tuple(spark, sf_dir):

@@ -16,7 +16,7 @@ WHOLE streaming inventory, not just the query that bit:
   between batches;
 - each query's stream-end answer is then held to the SAME DuckDB
   oracle the single-batch correctness harness uses (batch twins for
-  the two rows-only queries).
+  q32 and q105, checked here against their batch twins).
 
 In-order slices keep all data inside the 2 h lateness policy, so
 stream end must STILL equal the batch answer; the deliberate
