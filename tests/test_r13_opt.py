@@ -131,14 +131,17 @@ def test_q230_empty_input_matches_oracle(spark, sf_dir, tmp_path):
 
 
 def test_extra_conf_java_options_merge_with_defaults():
-    """*.extraJavaOptions from the env MERGE with the tuned defaults
-    (defaults first, env flags last so they win in the JVM); other
-    keys still overwrite; ';' in values stays unrepresentable and
-    fails loudly (r12 advice)."""
+    """*.extraJavaOptions from the env or the caller's extra_conf MERGE
+    with the tuned defaults (defaults first, env flags next, the
+    caller's last, so later flags win in the JVM); other keys still
+    overwrite; ';' in values stays unrepresentable and fails loudly
+    (r12 advice)."""
     import pytest
 
     from real_time_stream_processing_engine_spark.session import (
+        _DEFAULTS,
         apply_env_conf,
+        session_conf,
     )
 
     conf = {
@@ -158,5 +161,13 @@ def test_extra_conf_java_options_merge_with_defaults():
     conf2 = {}
     apply_env_conf(conf2, "spark.executor.extraJavaOptions=-Xss4m")
     assert conf2["spark.executor.extraJavaOptions"] == "-Xss4m"
+    # get_spark(extra_conf=...) merges by the same rule, after the env
+    conf3 = session_conf(
+        extra_conf={"spark.driver.extraJavaOptions": "-Xss4m"},
+        env={"SPARK_GRAFT_EXTRA_CONF": "spark.driver.extraJavaOptions=-Da=1"},
+    )
+    assert conf3["spark.driver.extraJavaOptions"] == (
+        f"{_DEFAULTS['spark.driver.extraJavaOptions']} -Da=1 -Xss4m"
+    )
     with pytest.raises(ValueError, match="not k=v"):
         apply_env_conf({}, "oops-no-equals")
