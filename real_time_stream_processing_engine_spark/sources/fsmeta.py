@@ -69,8 +69,9 @@ def list_part_files(path: str) -> list[str]:
     flat listdir would wrongly report "no part files" (r5 review
     catch).  Skips ``_``/``.`` sidecars (_SUCCESS, _manifest) at every
     level; a plain file path returns itself as the single part.  THE
-    one part-filter — stream staging (`streaming.runner._expand_links`)
-    and the ts-unit sniff both go through here.  LOCAL-FS ONLY
+    one part-filter — the stream reader's hive-layout check, the
+    redelivery staging (`streaming.runner._expand_links`) and the
+    ts-unit sniff all go through here.  LOCAL-FS ONLY
     (os.walk) — on HDFS/S3 go through :func:`hadoop_tree_stats`.
 
     A nonexistent path fails HERE with the real name (r7 review): the
@@ -78,10 +79,9 @@ def list_part_files(path: str) -> list[str]:
     surfaced later as an opaque read failure against a staged symlink.
 
     A ``file:``-spelled LOCAL path normalizes HERE (r9 review), so
-    every consumer of this one part-filter — the ts-unit sniff, the
-    five maintained-table stream stagings, ``_as_stream_dir`` — gets
-    the fix at the entry point instead of each growing its own strip
-    call; returned part paths are plain local paths."""
+    every consumer of this one part-filter gets the fix at the entry
+    point instead of each growing its own strip call; returned part
+    paths are plain local paths."""
     path = strip_file_scheme(path)
     if not os.path.exists(path):
         raise FileNotFoundError(f"no such dataset: {path}")

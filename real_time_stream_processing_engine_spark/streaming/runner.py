@@ -13,12 +13,15 @@ DataFrames; ``readStream`` vs ``read`` is the only switch (SURVEY.md §1.4).
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import shutil
+import stat
 import tempfile
 import uuid
-import warnings
 from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,160 +44,97 @@ def _scratch_dir() -> str:
     return tempfile.gettempdir()
 
 
-def _stage_symlink_dir(tag: str, links: dict[str, str]) -> str:
-    """Stage a directory of symlinks under scratch, safely.
-
-    The dir is namespaced per-user (uid) and keyed by the *content* of
-    the requested layout (link names + targets), so a layout change
-    gets a fresh directory instead of silently reusing a stale one.
-    Every pre-existing entry is validated: anything that is not a
-    symlink to the expected target (a foreign file squatted into the
-    shared path, a link left by an older layout) fails loudly rather
-    than silently altering stream input."""
-    key = uuid.uuid5(
-        uuid.NAMESPACE_URL, "|".join(f"{n}->{t}" for n, t in sorted(links.items()))
-    ).hex
-    d = os.path.join(_scratch_dir(), f"rs_{tag}_u{os.getuid()}_{key}")
-    os.makedirs(d, exist_ok=True, mode=0o700)
-    for name, target in links.items():
-        link = os.path.join(d, name)
-        if os.path.islink(link):
-            if os.readlink(link) == target:
-                continue
-            raise RuntimeError(f"stale staging link {link} -> {os.readlink(link)}, expected {target}")
-        if os.path.exists(link):
-            raise RuntimeError(f"foreign non-symlink entry in staging dir: {link}")
-        try:
-            os.symlink(target, link)
-        except FileExistsError:
-            # lost a race with a concurrent stager of the SAME layout
-            # (the dir is deliberately shared per-uid + content key) —
-            # fine iff the winner created exactly the expected link
-            if not (os.path.islink(link) and os.readlink(link) == target):
-                raise
-    extra = set(os.listdir(d)) - set(links)
-    if extra:
-        raise RuntimeError(f"unexpected entries in staging dir {d}: {sorted(extra)}")
-    return d
-
-
-def _fresh_symlink_dir(tag: str, links: dict[str, str]) -> str:
-    """A new private staging dir for a drain whose checkpoint is fresh
-    too: nothing can resume from it, so the caller removes it when the
-    drain ends (a shared content-keyed dir would outlive every run)."""
-    d = tempfile.mkdtemp(prefix=f"rs_{tag}_u{os.getuid()}_", dir=_scratch_dir())
-    for name, target in links.items():
-        os.symlink(target, os.path.join(d, name))
-    return d
-
-
-def _as_stream_dir(path: str) -> str:
-    """Spark's file stream source requires a directory; the testdata
-    tables are single parquet files.  Stage a symlink dir (no copy).
-
-    FLAT directories (every part a direct child) pass through
-    UNCHANGED (r7 advice): staging snapshots the part list at stream
-    construction, so a live drop-zone directory would silently never
-    stream files that land after start — the continuous-ingest case
-    the maxFileAge=36500d setting explicitly targets.  Spark's file
-    source polls a raw flat directory for new arrivals on every
-    trigger, which is the semantics an ingest caller expects.
-
-    Single files and NESTED directories still stage one link per part
-    (the file stream source lists non-recursively, so an unstaged
-    nested drop-zone would silently stream only top-level files);
-    staged nested sources are therefore FROZEN at start, and hive
-    layouts are refused loudly by `_expand_links`, exactly as for the
-    five maintained-table paths.
-
-    A ``file:``-spelled LOCAL path is normalized first (r9, same
-    policy as every other driver-local consumer): the os-level listing
-    below would otherwise refuse a directory Spark itself reads."""
-    from ..sources.fsmeta import list_part_files, strip_file_scheme
-
-    path = strip_file_scheme(path)
-    parts = list_part_files(path)
-    if parts != [path]:
-        entries = [
-            e for e in os.listdir(path) if not e.startswith(("_", "."))
-        ]
-        # flat = every part a direct child AND no stray non-parquet
-        # entries (a .csv in the drop zone would feed the raw parquet
-        # stream reader; staging used to filter it — keep that safety
-        # by falling back to staging for mixed-content dirs)
-        all_direct = all(
-            os.path.dirname(os.path.relpath(p, path)) == "" for p in parts
+def _refuse_hive_layout(src_path: str, parts: list[str]) -> None:
+    """A hive layout's ``key=value`` directory names carry column
+    VALUES: Spark parses partition values from directory names only, so
+    a recursive file listing or a flattened staging dir would stream
+    rows missing the partition columns the batch reader resolves — the
+    same refuse-dont-flatten contract as ``catalog.merge_table``."""
+    hive = sorted({
+        c
+        for p in parts
+        for c in os.path.relpath(p, src_path).split(os.sep)[:-1]
+        if "=" in c
+    })
+    if hive:
+        raise RuntimeError(
+            f"refusing to stream hive-partitioned layout {src_path!r}: "
+            f"directory component(s) {hive} carry partition-column values "
+            "that a recursive file listing would drop (rows would stream "
+            "without those columns). Point the stream at a flat copy, or "
+            "read the directory directly."
         )
-        if all_direct:
-            if len(entries) == len(parts):
-                return path
-            # Flat layout, but stray non-parquet entries force the
-            # staged (snapshot-at-start) path.  That DEMOTES a live
-            # drop-zone to a frozen file list — files landing after
-            # stream start are silently never streamed — so say so
-            # loudly instead of letting the caller discover a frozen
-            # ingest by absence (r8 advice).
-            strays = sorted(
-                set(entries)
-                - {os.path.relpath(p, path) for p in parts}
-            )
-            warnings.warn(
-                f"stream source directory {path!r} is flat but contains "
-                f"non-parquet entries {strays[:5]!r}; staging a snapshot "
-                "of its current part files instead of polling it live — "
-                "files added after stream start will NOT be streamed. "
-                "Remove the stray entries to get live drop-zone polling.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    return _stage_symlink_dir("streamdir", _expand_links("streamdir", path))
 
 
 def _expand_links(prefix: str, src_path: str) -> dict[str, str]:
     """Per-part symlink map for one source table, file OR directory.
 
-    The file stream source lists a directory NON-recursively, so a
-    multi-file table (directory of part files — the multi-batch test
-    layout, and any real ingest drop zone) must be staged as one link
-    per part, not one link to the directory.  Part discovery goes
-    through the shared filter in :mod:`sources.fsmeta`."""
+    Links are keyed by the part's path RELATIVE to ``src_path`` with
+    separators flattened, not by basename: nested drop-zone layouts
+    (batch1/part-00000, batch2/part-00000) repeat part filenames across
+    subdirectories, and basename keys silently collapsed those to one
+    link.  Hive layouts are refused (:func:`_refuse_hive_layout`).  Part
+    discovery goes through the shared filter in :mod:`sources.fsmeta`."""
     from ..sources.fsmeta import list_part_files
 
     parts = list_part_files(src_path)
     if parts == [src_path]:
         return {f"{prefix}.parquet": src_path}
-    # Key links by the path RELATIVE to src_path with separators
-    # flattened, not by basename: part discovery is recursive, and
-    # nested drop-zone layouts (batch1/part-00000, batch2/part-00000)
-    # repeat part filenames across subdirectories — basename keys
-    # silently collapsed those to one link (r5 advice: silent data
-    # loss).  HIVE-partitioned layouts are refused outright: their
-    # key=value directory names carry column VALUES that a flattened
-    # symlink dir cannot represent (Spark parses partition values from
-    # directory names only), so staging one would stream rows missing
-    # the partition columns the batch reader resolves — the same
-    # refuse-dont-flatten contract as catalog.merge_table (r6 review
-    # catch).
+    _refuse_hive_layout(src_path, parts)
     links: dict[str, str] = {}
     for p in parts:
-        rel = os.path.relpath(p, src_path) if p != src_path else os.path.basename(p)
-        comps = rel.split(os.sep)[:-1]
-        hive = [c for c in comps if "=" in c]
-        if hive:
-            raise RuntimeError(
-                f"refusing to stage hive-partitioned layout {src_path!r} as a "
-                f"flat stream dir: directory component(s) {hive} carry "
-                "partition-column values that symlink flattening would drop "
-                "(rows would stream without those columns). Point the stream "
-                "at a flat copy, or read the directory directly."
-            )
-        name = f"{prefix}_{rel.replace(os.sep, '__')}"
+        name = f"{prefix}_{os.path.relpath(p, src_path).replace(os.sep, '__')}"
         if name in links:
             raise RuntimeError(
                 f"duplicate staged link name {name!r} for {links[name]} and {p}"
             )
         links[name] = p
     return links
+
+
+@contextmanager
+def _redelivery_dir(tag: str, src_path: str, checkpoint: str | None):
+    """The events table staged TWICE (``events_a``/``events_b`` links)
+    under scratch, for the two redelivery drains: every tuple must
+    arrive in two different micro-batches, and a union of two streams
+    over one file delivers both copies in the same batch.
+
+    The dir is created when the drain starts and removed when it ends,
+    cleanly or not.  Its name is keyed on the link layout and the
+    normalized ``checkpoint`` (a fresh key when there is none), so an
+    explicit-checkpoint resume recreates the very link paths its
+    file-source log recorded.  Scratch is world-writable: a dir this
+    user does not own, a stale link or a foreign entry fails loudly
+    rather than silently altering stream input."""
+    links = {
+        k: v for c in ("events_a", "events_b") for k, v in _expand_links(c, src_path).items()
+    }
+    layout = "|".join(f"{n}->{t}" for n, t in sorted(links.items()))
+    owner = _norm_ckpt(checkpoint) if checkpoint else uuid.uuid4().hex
+    key = uuid.uuid5(uuid.NAMESPACE_URL, f"{owner}|{layout}").hex
+    d = os.path.join(_scratch_dir(), f"rs_{tag}_u{os.getuid()}_{key}")
+    os.makedirs(d, exist_ok=True, mode=0o700)
+    st = os.lstat(d)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
+        raise RuntimeError(f"staging dir {d} is not a directory this user owns")
+    for name, target in links.items():
+        link = os.path.join(d, name)
+        if os.path.islink(link):
+            if os.readlink(link) != target:
+                raise RuntimeError(
+                    f"stale staging link {link} -> {os.readlink(link)}, expected {target}"
+                )
+        elif os.path.exists(link):
+            raise RuntimeError(f"foreign non-symlink entry in staging dir: {link}")
+        else:
+            os.symlink(target, link)
+    extra = set(os.listdir(d)) - set(links)
+    if extra:
+        raise RuntimeError(f"unexpected entries in staging dir {d}: {sorted(extra)}")
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # Files per micro-batch forced on every events file stream; None leaves
@@ -206,13 +146,26 @@ _FORCED_MAX_FILES: int | None = None
 
 
 def _read_events_stream(
-    spark: SparkSession, src_path: str, stream_dir: str, max_files: int | None
+    spark: SparkSession,
+    src_path: str,
+    max_files: int | None,
+    staged: str | None = None,
 ) -> DataFrame:
     """The one reader setup for every events file stream: the schema
     and timestamp conversion are unit-sniffed from ``src_path`` and
     SHARED with load_table, so batch and stream reads can never diverge
-    on the timestamp unit.  ``stream_dir`` is what the file source
-    polls (the table itself or a staged symlink dir)."""
+    on the timestamp unit.
+
+    The file source polls the table where it lies (or ``staged``, a
+    redelivery dir).  It needs a directory, so a single file is read
+    through its parent with ``pathGlobFilter`` set to the file's
+    (escaped) name.  A directory is read with ``*.parquet`` and
+    ``recursiveFileLookup``: a flat or nested drop zone streams every
+    part that lands after start, in a new subdirectory too, and a stray
+    non-parquet entry is skipped.  Hive layouts are refused
+    (:func:`_refuse_hive_layout`)."""
+    from ..sources.fsmeta import list_part_files, strip_file_scheme
+
     schema, conv = read_schema_for("events", src_path)
     # maxFileAge defaults to 7d: on a long-running stream a backfill
     # file whose mtime is >7d older than the newest seen file is
@@ -221,18 +174,31 @@ def _read_events_stream(
     reader = spark.readStream.schema(schema).option("maxFileAge", "36500d")
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
-    return convert_ts_cols(reader.parquet(stream_dir), conv)
+    path = strip_file_scheme(staged or src_path)
+    if os.path.isdir(path):
+        _refuse_hive_layout(path, list_part_files(path))
+        reader = reader.option("pathGlobFilter", "*.parquet").option(
+            "recursiveFileLookup", "true"
+        )
+    else:
+        parent, name = os.path.split(path)
+        path = parent or "."
+        # escape Hadoop GlobPattern's metacharacters in the file name
+        reader = reader.option("pathGlobFilter", re.sub(r"([\\*?\[\]{}])", r"\\\1", name))
+    return convert_ts_cols(reader.parquet(path), conv)
 
 
 def stream_events(spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
     """File-source stream over the events table (the reference's chunk
-    stream, E1).  ``maxFilesPerTrigger`` is the backpressure knob the
-    reference lacks (busy-wait blast, ``RainStorm.java:1292-1296``);
-    an explicit value wins over ``_FORCED_MAX_FILES``."""
-    path = os.path.join(sf_dir, "events.parquet")
+    stream, E1), read in place.  ``maxFilesPerTrigger`` is the
+    backpressure knob the reference lacks (busy-wait blast,
+    ``RainStorm.java:1292-1296``); an explicit value wins over
+    ``_FORCED_MAX_FILES``."""
     if max_files_per_trigger is None:
         max_files_per_trigger = _FORCED_MAX_FILES
-    return _read_events_stream(spark, path, _as_stream_dir(path), max_files_per_trigger)
+    return _read_events_stream(
+        spark, os.path.join(sf_dir, "events.parquet"), max_files_per_trigger
+    )
 
 
 def stream_rate(spark: SparkSession, rows_per_second: int = 10) -> DataFrame:
@@ -458,7 +424,8 @@ def stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once delivery emulation + exactly-once dedup (E4 parity).
 
-    The source directory stages the SAME events file twice — every tuple
+    The drain streams the SAME events file twice, from a dir staged for
+    it and removed when it ends (:func:`_redelivery_dir`) — every tuple
     arrives (at least) twice, exactly like the reference's 5 s retry
     resend path (``Node.java:1547-1564``), whose unused dedup set
     (``Node.java:117``) lets retries overcount.
@@ -470,20 +437,14 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen (a retry storm redelivers within seconds; the 2 h window is
     generous)."""
     src_path = os.path.join(sf_dir, "events.parquet")
-    d = _fresh_symlink_dir(
-        "dupdir",
-        {**_expand_links("events_a", src_path), **_expand_links("events_b", src_path)},
-    )
-    try:
+    with _redelivery_dir("dupdir", src_path, None) as d:
         src = _read_events_stream(
-            spark, src_path, d, _FORCED_MAX_FILES
+            spark, src_path, _FORCED_MAX_FILES, d
         ).withWatermark("ts", "2 hours")
         deduped = src.dropDuplicatesWithinWatermark(["event_id"])
         agg = deduped.groupBy("event_type").agg(F.count("*").alias("cnt"))
         # the memory sink holds the rows; the drain reads d no more
         return run_to_memory_available_now(agg).frame
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,7 +515,7 @@ def _maintain_table(
     fail_after_batches: int | None = None,
     *,
     ledger: bool,
-    copies: tuple[str, ...] = ("events",),
+    redeliver: bool = False,
     seed: Callable[[], DataFrame] | None = None,
 ) -> DataFrame:
     """The one update loop behind every maintained table: a parquet target
@@ -568,42 +529,33 @@ def _maintain_table(
     NOT idempotent: ``last_batch`` and ``last_ckpt`` ride in the target
     rows, swapped atomically with them, so a replayed batch id <= the
     ledger is skipped whole and a foreign checkpoint is refused
-    (:func:`_check_ledger_ckpt`).  ``copies`` stages the events table
-    once per name (two = every tuple redelivered); ``seed`` builds the
-    initial target when none exists.
+    (:func:`_check_ledger_ckpt`).  The events table streams in place;
+    ``redeliver`` streams it twice instead, from a dir staged for this
+    drain (:func:`_redelivery_dir`).  ``seed`` builds the initial target
+    when none exists.
 
     ``target_path``/``checkpoint`` default to fresh scratch dirs
     (``rs_<tag>_target_*``, ``rs_ckpt_rs_<tag>_*``); pass both
     explicitly to RESUME an interrupted run from its checkpoint.  A
-    default checkpoint is unresumable by construction, so it and its
-    source staging dir are reclaimed when the drain ends, cleanly or
-    not; an explicit one keeps the shared staging dir whose link paths
-    its file-source log records.  ``fail_after_batches``
+    default checkpoint is unresumable by construction, and a default
+    target has no other reader, so each is reclaimed when the drain
+    ends, cleanly or not; the returned frame is then a local checkpoint
+    of the read-back, so it outlives its target.  ``fail_after_batches``
     is the crash-injection hook: the sink raises after N applied
     batches, exactly like an executor/driver loss mid-stream, and the
     drain raises it to the caller."""
     from ..sources.catalog import recover_swap, replace_contents
 
     src_path = os.path.join(sf_dir, "events.parquet")
-    links = {k: v for c in copies for k, v in _expand_links(c, src_path).items()}
-    default_ckpt = checkpoint is None
-    if target_path is None:
+    default_target = target_path is None
+    if default_target:
         target_path = os.path.join(
             _scratch_dir(), f"rs_{tag}_target_u{os.getuid()}_{uuid.uuid4().hex[:8]}"
         )
+    default_ckpt = checkpoint is None
     ckpt = checkpoint or os.path.join(
         _scratch_dir(), f"rs_ckpt_rs_{tag}_{uuid.uuid4().hex[:8]}"
     )
-    # recover_swap first: a crash inside replace_contents' rename window
-    # leaves the target briefly missing but fully recoverable from its
-    # swap siblings — seeding in that state would silently drop every
-    # batch the checkpoint already marked committed.  The seed goes
-    # through the SAME atomic swap as every batch write: a plain
-    # write.parquet could crash mid-commit and leave a partial dir that
-    # recover_swap's existence check would treat as a complete table.
-    if not recover_swap(spark, target_path) and seed is not None:
-        replace_contents(seed(), target_path)
-
     n_applied = 0
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
@@ -634,23 +586,34 @@ def _maintain_table(
         replace_contents(merged, target_path)
         n_applied += 1
 
-    d = (_fresh_symlink_dir if default_ckpt else _stage_symlink_dir)(
-        f"{tag}dir", links
-    )
     try:
-        src = _read_events_stream(spark, src_path, d, _FORCED_MAX_FILES or 1)
-        (
-            src.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        # recover_swap first: a crash inside replace_contents' rename window
+        # leaves the target briefly missing but fully recoverable from its
+        # swap siblings — seeding in that state would silently drop every
+        # batch the checkpoint already marked committed.  The seed goes
+        # through the SAME atomic swap as every batch write: a plain
+        # write.parquet could crash mid-commit and leave a partial dir that
+        # recover_swap's existence check would treat as a complete table.
+        if not recover_swap(spark, target_path) and seed is not None:
+            replace_contents(seed(), target_path)
+        staging = _redelivery_dir(f"{tag}dir", src_path, ckpt) if redeliver else nullcontext()
+        with staging as staged:
+            src = _read_events_stream(spark, src_path, _FORCED_MAX_FILES or 1, staged)
+            (
+                src.writeStream.foreachBatch(apply_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        out = spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
+        return out.localCheckpoint(eager=True) if default_target else out
     finally:
         if default_ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
-            shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(target_path).drop("last_batch", "last_ckpt")
+        if default_target:
+            for p in [target_path, *glob.glob(f"{target_path}__swap_*")]:
+                shutil.rmtree(p, ignore_errors=True)
 
 
 def stream_cdc_upsert(
@@ -663,8 +626,9 @@ def stream_cdc_upsert(
     """Streaming CDC: ``foreachBatch`` + versioned idempotent merge =
     exactly-once effects over at-least-once delivery.
 
-    The source stages the SAME events file twice with
-    ``maxFilesPerTrigger=1`` — every tuple arrives in (at least) two
+    The drain streams the SAME events file twice, from a dir staged for
+    it and removed when it ends (:func:`_redelivery_dir`), with
+    ``maxFilesPerTrigger=1`` — every tuple arrives in two different
     micro-batches, the reference's retry-storm delivery
     (``Node.java:1547-1564``).  Each batch: latest-wins rank within
     the batch, then :func:`..operators.cdc.apply_upsert_versioned`
@@ -675,10 +639,12 @@ def stream_cdc_upsert(
     batch count or order — sink-side dedup with a durable ledger,
     where q30 dedups in the state store instead.
 
-    ``target_path``/``checkpoint`` default to fresh scratch dirs; pass
-    both explicitly to RESUME an interrupted run — the checkpoint
-    replays unfinished batches, and the version gate makes any batch
-    that already half-applied idempotent.  ``fail_after_batches`` is
+    ``target_path``/``checkpoint`` default to fresh scratch dirs that
+    the drain reclaims; pass both explicitly to RESUME an interrupted
+    run — the checkpoint replays unfinished batches (the staged dir is
+    recreated at the same link paths, which its file-source log
+    records), and the version gate makes any batch that already
+    half-applied idempotent.  ``fail_after_batches`` is
     the crash-injection hook for that test: the drain raises after N
     applied batches."""
     from pyspark.sql import Window
@@ -724,7 +690,7 @@ def stream_cdc_upsert(
 
     final = _maintain_table(
         spark, sf_dir, "cdc", merge, target_path, checkpoint, fail_after_batches,
-        ledger=False, copies=("events_a", "events_b"), seed=seed,
+        ledger=False, redeliver=True, seed=seed,
     )
     return final.select(
         "c_custkey",

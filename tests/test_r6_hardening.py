@@ -93,6 +93,45 @@ def test_expand_links_flat_dir_unchanged(tmp_path):
     assert _expand_links("t", str(single)) == {"t.parquet": str(single)}
 
 
+def test_redelivery_dir_lives_and_dies_with_its_drain(tmp_path, monkeypatch):
+    """The redelivery staging dir is removed when its drain ends, on
+    the crash path too; a resume from the same checkpoint stages the
+    same link paths; a foreign entry in the dir, or a link squatting
+    its name, refuses and is left alone (scratch is world-writable)."""
+    from real_time_stream_processing_engine_spark.streaming.runner import (
+        _redelivery_dir,
+    )
+
+    from .conftest import SF_SMOKE
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    src = os.path.join(SF_SMOKE, "events.parquet")
+    ck = str(tmp_path / "ck")
+    with _redelivery_dir("t", src, ck) as d:
+        assert sorted(os.listdir(d)) == ["events_a.parquet", "events_b.parquet"]
+    assert not os.path.exists(d)
+    with pytest.raises(ValueError):
+        with _redelivery_dir("t", src, ck + "/") as again:
+            assert again == d
+            raise ValueError("drain crashed")
+    assert not os.path.exists(d)
+    with _redelivery_dir("t", src, None) as fresh:
+        assert fresh != d
+    os.makedirs(d)
+    with open(os.path.join(d, "x.parquet"), "wb") as fh:
+        fh.write(b"x")
+    with pytest.raises(RuntimeError, match="unexpected entries"):
+        with _redelivery_dir("t", src, ck):
+            pass
+    assert os.path.exists(os.path.join(d, "x.parquet"))
+    # so does the dir's name squatted by a link to somewhere else
+    os.rename(d, tmp_path / "elsewhere")
+    os.symlink(tmp_path / "elsewhere", d)
+    with pytest.raises(RuntimeError, match="not a directory this user owns"):
+        with _redelivery_dir("t", src, ck):
+            pass
+
+
 def test_bm25_indexed_empty_sidecar_falls_back_to_args(spark, tmp_path):
     """ADVICE r5 (text.py): a probe_params directory that exists but
     holds no rows (interrupted write) made .head() return None and the

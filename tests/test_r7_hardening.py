@@ -269,9 +269,8 @@ def test_default_checkpoints_are_reclaimed(spark, sf_dir, tmp_path):
     # default (fresh-uuid) checkpoints are unresumable by construction;
     # a clean drain must not leak them on tmpfs (r7 review: bench loops
     # over the foreachBatch sinks grew /dev/shm without bound).  The
-    # source staging dirs of those drains go with them: the events
-    # table is linked in from a fresh path, so a content-keyed staging
-    # dir left behind would be a new entry
+    # redelivery staging dirs and the default maintained-table targets
+    # go with them: nothing else reads either
     import glob
     import os
 
@@ -279,12 +278,13 @@ def test_default_checkpoints_are_reclaimed(spark, sf_dir, tmp_path):
         _scratch_dir,
         stream_binned_counts,
         stream_bitmap_dau,
+        stream_cdc_upsert,
+        stream_countmin,
         stream_dedup_counts,
     )
 
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"), tmp_path / "events.parquet"
-    )
+    for t in ("events", "customer"):
+        os.symlink(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
     src = str(tmp_path)
 
     def entries(*tags):
@@ -294,16 +294,21 @@ def test_default_checkpoints_are_reclaimed(spark, sf_dir, tmp_path):
             for p in glob.glob(os.path.join(_scratch_dir(), f"rs_{t}_*"))
         }
 
-    before = entries("ckpt_rs_dau", "daudir", "dupdir")
+    clean = ("ckpt_rs_dau", "dau_target", "ckpt_rs_cdc", "cdc_target", "cdcdir", "dupdir")
+    before = entries(*clean)
     stream_bitmap_dau(spark, src).collect()
+    stream_cdc_upsert(spark, src).collect()
     stream_dedup_counts(spark, src).collect()
-    assert entries("ckpt_rs_dau", "daudir", "dupdir") <= before
+    assert entries(*clean) <= before
     # a crashed drain cannot be resumed from a checkpoint the caller
-    # never saw, so that one and its staging dir are reclaimed too
-    before = entries("ckpt_rs_psi", "psidir")
+    # never saw, so that one and its target are reclaimed too
+    crashed = ("ckpt_rs_psi", "psi_target", "ckpt_rs_cms", "cms_target")
+    before = entries(*crashed)
     with pytest.raises(Exception, match="injected sink crash"):
         stream_binned_counts(spark, src, fail_after_batches=0)
-    assert entries("ckpt_rs_psi", "psidir") <= before
+    with pytest.raises(Exception, match="injected sink crash"):
+        stream_countmin(spark, src, fail_after_batches=0)
+    assert entries(*crashed) <= before
 
 
 # ---------------------------------------------------------------------------

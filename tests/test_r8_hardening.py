@@ -1,110 +1,66 @@
 """Round-8 hardening: the r7 ADVICE items — live drop-zone directory
-sources must keep polling (flat dirs pass through `_as_stream_dir`
-unstaged), checkpoint-ledger identity must survive equivalent path
-spellings, and bench's slowest-10 must never list failures."""
+sources must keep polling (the events stream reads its source in place,
+flat or nested), checkpoint-ledger identity must survive equivalent
+path spellings, and bench's slowest-10 must never list failures."""
 
 from __future__ import annotations
 
+import glob
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from real_time_stream_processing_engine_spark.streaming.runner import (
-    _as_stream_dir,
     _check_ledger_ckpt,
     _norm_ckpt,
+    _read_events_stream,
+    _scratch_dir,
+    stream_events,
 )
 
+from .conftest import land, live_counts
+
 
 # ---------------------------------------------------------------------------
-# _as_stream_dir: flat drop-zones pass through; nested/mixed still stage
+# stream_events reads its source in place
 # ---------------------------------------------------------------------------
-
-
-def _two_flat_parts(spark, tmp_path):
-    d = tmp_path / "drop"
-    spark.range(10).coalesce(1).write.parquet(str(tmp_path / "a"))
-    spark.range(10, 25).coalesce(1).write.parquet(str(tmp_path / "b"))
-    os.makedirs(d)
-    for src in ("a", "b"):
-        (part,) = [
-            f
-            for f in os.listdir(tmp_path / src)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        os.rename(tmp_path / src / part, d / f"{src}_{part}")
-    return str(d)
-
-
-def test_flat_directory_passes_through_unstaged(spark, tmp_path):
-    d = _two_flat_parts(spark, tmp_path)
-    assert _as_stream_dir(d) == d
-
-
-def test_single_file_still_staged(spark, tmp_path):
-    d = _two_flat_parts(spark, tmp_path)
-    one = os.path.join(d, sorted(os.listdir(d))[0])
-    staged = _as_stream_dir(one)
-    assert staged != one and os.path.isdir(staged)
-
-
-def test_mixed_content_directory_still_staged(spark, tmp_path):
-    # a stray non-parquet file in the drop zone would feed the raw
-    # parquet stream reader if passed through — staging filters it
-    d = _two_flat_parts(spark, tmp_path)
-    with open(os.path.join(d, "notes.txt"), "w") as fh:
-        fh.write("not parquet")
-    staged = _as_stream_dir(d)
-    assert staged != d
-    assert all(f.endswith(".parquet") for f in os.listdir(staged))
-
-
-def test_nested_directory_still_staged(spark, tmp_path):
-    d = tmp_path / "drop"
-    spark.range(5).coalesce(1).write.parquet(str(d / "batch1"))
-    staged = _as_stream_dir(str(d))
-    assert staged != str(d)
 
 
 def test_live_drop_zone_streams_late_arriving_files(spark, tmp_path):
-    # THE r7 advice case: a file landing AFTER stream start must be
-    # streamed on the next trigger.  The old snapshot staging froze
-    # the part list at construction and silently dropped it.
-    d = _two_flat_parts(spark, tmp_path)
-    src_dir = _as_stream_dir(d)
-    assert src_dir == d
-    stream = (
-        spark.readStream.schema("id long")
-        .option("maxFileAge", "36500d")
-        .parquet(src_dir)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("r8_live_drop")
-        .outputMode("append")
-        .option(
-            "checkpointLocation", str(tmp_path / "ck")
-        )
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n0 = spark.sql("SELECT count(*) c FROM r8_live_drop").first().c
-        assert n0 == 25
-        # late arrival: write elsewhere, move the part in atomically
-        spark.range(100, 140).coalesce(1).write.parquet(str(tmp_path / "c"))
-        (part,) = [
-            f
-            for f in os.listdir(tmp_path / "c")
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-        os.rename(tmp_path / "c" / part, os.path.join(d, f"c_{part}"))
-        q.processAllAvailable()
-        n1 = spark.sql("SELECT count(*) c FROM r8_live_drop").first().c
-        assert n1 == 65
-    finally:
-        q.stop()
+    # THE r7 advice case: a part landing AFTER stream start must be
+    # streamed on a later trigger, not frozen out by a start snapshot
+    zone = tmp_path / "sf" / "events.parquet"
+    land(str(zone / "a.parquet"), 0, 10)
+    land(str(zone / "b.parquet"), 10, 25)
+    src = stream_events(spark, str(tmp_path / "sf"))
+    then = lambda: land(str(zone / "c.parquet"), 25, 65)  # noqa: E731
+    assert live_counts(src, "r8_flat_live", tmp_path, then) == [25, 65]
+
+
+def test_nested_drop_zone_streams_part_in_new_subdirectory(spark, tmp_path):
+    # a start-time snapshot of a nested zone never saw b2/ at all
+    zone = tmp_path / "sf" / "events.parquet"
+    land(str(zone / "b1" / "part-0.parquet"), 0, 10)
+    src = stream_events(spark, str(tmp_path / "sf"))
+    then = lambda: land(str(zone / "b2" / "part-0.parquet"), 10, 50)  # noqa: E731
+    assert live_counts(src, "r8_nested_live", tmp_path, then) == [10, 50]
+
+
+def test_reader_escapes_glob_metacharacters_in_file_name(spark, tmp_path):
+    # unescaped, the filter 'ev[1].parquet' would match ev1.parquet only
+    land(str(tmp_path / "ev[1].parquet"), 0, 10)
+    land(str(tmp_path / "ev1.parquet"), 10, 35)
+    src = _read_events_stream(spark, str(tmp_path / "ev[1].parquet"), None)
+    assert live_counts(src, "r8_glob_name", tmp_path) == [10]
+
+
+def test_stream_events_stages_nothing(spark, sf_dir, tmp_path):
+    land(str(tmp_path / "sf" / "events.parquet" / "b1" / "p.parquet"), 0, 10)
+    scratch = os.path.join(_scratch_dir(), "rs_*")
+    before = set(glob.glob(scratch))
+    stream_events(spark, sf_dir)
+    stream_events(spark, str(tmp_path / "sf"))
+    assert set(glob.glob(scratch)) == before
 
 
 # ---------------------------------------------------------------------------

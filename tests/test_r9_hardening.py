@@ -1,7 +1,7 @@
 """Round-9 hardening: the r8 ADVICE items — `file:`-scheme checkpoint
 spellings normalize (single-slash Hadoop canonical form included), a
-flat drop-zone demoted to snapshot staging by stray entries says so
-loudly, basket_similarity's drop accounting survives q141's own
+drop zone with stray non-parquet entries keeps streaming live and
+skips them, basket_similarity's drop accounting survives q141's own
 transformations, and a partially-NULL insert version is refused by the
 versioned upsert instead of seeding an always-overwritable row."""
 
@@ -12,9 +12,12 @@ import os
 import pytest
 
 from real_time_stream_processing_engine_spark.streaming.runner import (
-    _as_stream_dir,
     _norm_ckpt,
+    run_to_memory_available_now,
+    stream_events,
 )
+
+from .conftest import land, live_counts
 
 
 # ---------------------------------------------------------------------------
@@ -43,46 +46,22 @@ def test_norm_ckpt_remote_uri_still_untouched():
 
 
 # ---------------------------------------------------------------------------
-# _as_stream_dir: stray-entry demotion to snapshot staging warns loudly
+# a drop zone's stray entries are skipped; the stream stays live
 # ---------------------------------------------------------------------------
 
 
-def _flat_dir(spark, tmp_path, stray: bool):
-    """One flat drop-zone fixture for both the warns and the
-    warning-free test (one copy, so a staging-layout or sidecar-filter
-    change cannot silently diverge them — r9 review)."""
-    d = tmp_path / "drop"
-    spark.range(10).coalesce(1).write.parquet(str(tmp_path / "a"))
-    os.makedirs(d)
-    (part,) = [
-        f
-        for f in os.listdir(tmp_path / "a")
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
-    os.rename(tmp_path / "a" / part, d / part)
-    if stray:
-        with open(d / "stray.csv", "w") as fh:
-            fh.write("not,parquet\n")
-    return str(d)
-
-
-def test_flat_dir_with_stray_entry_warns_on_demotion(spark, tmp_path):
-    # the stray .csv forces the staged (frozen-at-start) path — the
-    # caller must hear that the stream will not poll live (r8 advice)
-    d = _flat_dir(spark, tmp_path, stray=True)
-    with pytest.warns(RuntimeWarning, match="NOT be streamed"):
-        staged = _as_stream_dir(d)
-    assert staged != d
-    assert all(f.endswith(".parquet") for f in os.listdir(staged))
-
-
-def test_flat_dir_without_strays_does_not_warn(spark, tmp_path):
+def test_stray_entries_skipped_and_stream_stays_live(spark, tmp_path):
     import warnings
 
-    d = _flat_dir(spark, tmp_path, stray=False)
+    zone = tmp_path / "sf" / "events.parquet"
+    land(str(zone / "a.parquet"), 0, 10)
+    (zone / "stray.csv").write_text("not,parquet\n")
+    (zone / "_SUCCESS").write_text("")
     with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        assert _as_stream_dir(d) == d
+        warnings.simplefilter("error")
+        src = stream_events(spark, str(tmp_path / "sf"))
+    then = lambda: land(str(zone / "b.parquet"), 10, 50)  # noqa: E731
+    assert live_counts(src, "r9_stray_live", tmp_path, then) == [10, 50]
 
 
 # ---------------------------------------------------------------------------
@@ -234,16 +213,22 @@ def test_load_table_accepts_file_scheme_dir(spark):
     assert n_events == load_table(spark, sf, "events").count()
 
 
-def test_as_stream_dir_accepts_file_scheme(spark, tmp_path):
-    # a file:-spelled flat drop-zone streams exactly like its bare
-    # spelling instead of dying in the os-level listing
-    d = tmp_path / "zone"
-    spark.range(5).coalesce(1).write.parquet(str(d))
-    for f in os.listdir(d):
-        if f.startswith(("_", ".")):
-            os.remove(d / f)
-    assert _as_stream_dir(f"file://{d}") == str(d)
-    assert _as_stream_dir(f"file:{d}") == str(d)
+def test_stream_events_accepts_file_scheme(spark, sf_dir, tmp_path):
+    # file:-spelled drop zones and single files stream exactly like
+    # their bare spellings instead of dying in an os-level listing
+    from real_time_stream_processing_engine_spark.sources.readers import load_table
+
+    zone = tmp_path / "sf" / "events.parquet"
+    land(str(zone / "a.parquet"), 0, 10)
+    land(str(zone / "b" / "c.parquet"), 10, 25)
+
+    def rows(sf):
+        src = stream_events(spark, sf).select("event_id")
+        return run_to_memory_available_now(src, output_mode="append").frame.count()
+
+    assert rows(f"file://{tmp_path / 'sf'}") == rows(f"file:{tmp_path / 'sf'}") == 25
+    # a single file streams all its rows, whichever the spelling
+    assert rows(f"file:{sf_dir}") == rows(sf_dir) == load_table(spark, sf_dir, "events").count()
 
 
 def test_list_part_files_normalizes_file_scheme():

@@ -121,19 +121,17 @@ def test_backpressure_max_files_per_trigger(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from real_time_stream_processing_engine_spark.sources.readers import SCHEMAS
-    from real_time_stream_processing_engine_spark.streaming.runner import (
-        _stage_symlink_dir,
-    )
 
     src_path = "/root/testdata/sf0.001/events.parquet"
-    d = _stage_symlink_dir(
-        "bp_test", {f"events_{i}.parquet": src_path for i in range(3)}
-    )
+    d = tmp_path / "src"
+    d.mkdir()
+    for i in range(3):
+        os.symlink(src_path, d / f"events_{i}.parquet")
 
     def drain(reader, name):
         ckpt = str(tmp_path / f"ckpt_{name}")
         q = (
-            reader.parquet(d)
+            reader.parquet(str(d))
             .select("event_id")
             .writeStream.format("memory")
             .queryName(name)
