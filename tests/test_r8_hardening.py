@@ -14,6 +14,7 @@ from real_time_stream_processing_engine_spark.streaming.runner import (
     _check_ledger_ckpt,
     _norm_ckpt,
     _read_events_stream,
+    _redelivery_dir,
     _scratch_dir,
     stream_events,
 )
@@ -24,6 +25,18 @@ from .conftest import land, live_counts
 # ---------------------------------------------------------------------------
 # stream_events reads its source in place
 # ---------------------------------------------------------------------------
+
+
+def test_flat_directory_passes_through_unstaged(spark, tmp_path):
+    # a flat zone is read where it lies: no scratch entry, every row
+    zone = tmp_path / "sf" / "events.parquet"
+    land(str(zone / "a.parquet"), 0, 10)
+    land(str(zone / "b.parquet"), 10, 25)
+    scratch = os.path.join(_scratch_dir(), "rs_*")
+    before = set(glob.glob(scratch))
+    src = stream_events(spark, str(tmp_path / "sf"))
+    assert set(glob.glob(scratch)) == before
+    assert live_counts(src, "r8_flat_unstaged", tmp_path) == [25]
 
 
 def test_live_drop_zone_streams_late_arriving_files(spark, tmp_path):
@@ -61,6 +74,43 @@ def test_stream_events_stages_nothing(spark, sf_dir, tmp_path):
     stream_events(spark, sf_dir)
     stream_events(spark, str(tmp_path / "sf"))
     assert set(glob.glob(scratch)) == before
+
+
+# ---------------------------------------------------------------------------
+# only a redelivery drain stages, and it links parquet parts only
+# ---------------------------------------------------------------------------
+
+
+def _links(d):
+    return {n: os.readlink(os.path.join(d, n)) for n in os.listdir(d)}
+
+
+def test_single_file_still_staged(tmp_path, monkeypatch):
+    # twice, as two links to the file itself
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    one = str(tmp_path / "events.parquet")
+    land(one, 0, 10)
+    with _redelivery_dir("t", one, None) as d:
+        assert _links(d) == {"events_a.parquet": one, "events_b.parquet": one}
+    assert not os.path.exists(d)
+
+
+def test_mixed_content_directory_still_staged(tmp_path, monkeypatch):
+    # the stray file gets no link, so no drain reads it as parquet
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    zone = tmp_path / "zone"
+    land(str(zone / "a.parquet"), 0, 10)
+    land(str(zone / "b.parquet"), 10, 25)
+    (zone / "notes.txt").write_text("not parquet")
+    a, b = str(zone / "a.parquet"), str(zone / "b.parquet")
+    with _redelivery_dir("t", str(zone), None) as d:
+        assert _links(d) == {
+            "events_a_a.parquet": a,
+            "events_a_b.parquet": b,
+            "events_b_a.parquet": a,
+            "events_b_b.parquet": b,
+        }
+    assert not os.path.exists(d)
 
 
 # ---------------------------------------------------------------------------

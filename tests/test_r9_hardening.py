@@ -50,6 +50,17 @@ def test_norm_ckpt_remote_uri_still_untouched():
 # ---------------------------------------------------------------------------
 
 
+def test_flat_dir_without_strays_does_not_warn(spark, tmp_path):
+    import warnings
+
+    zone = tmp_path / "sf" / "events.parquet"
+    land(str(zone / "a.parquet"), 0, 10)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        src = stream_events(spark, str(tmp_path / "sf"))
+    assert live_counts(src, "r9_flat_no_warn", tmp_path) == [10]
+
+
 def test_stray_entries_skipped_and_stream_stays_live(spark, tmp_path):
     import warnings
 
